@@ -17,10 +17,16 @@ against golden outputs captured by executing the reference itself — see
 tests/goldens/).
 """
 
+from tempeh_spark import zipcache
 from tempeh_spark.api import HTMLParseHandle, HTMLParser
 from tempeh_spark.options import ParserOptions
 from tempeh_spark.parser import parse_bytes, parse_string
 from tempeh_spark.udf import PARSED_SCHEMA, make_parse_udf, parse_html
+
+# Every Spark Python worker that runs a tempeh function imports this package
+# before that function's first task, so the per-task archive re-read fix
+# reaches every worker (see zipcache.py).
+zipcache.install()
 
 __all__ = [
     "HTMLParser",

@@ -222,17 +222,21 @@ def run_extraction_job(
     else:
         extracted.write.mode("append").parquet(output)
 
+    # ONE scan of the committed output: write the per-partition metrics,
+    # then roll the summary up from that small table
     committed = spark.read.table(output) if is_table else spark.read.parquet(output)
-    metrics = partition_metrics(committed)
+    writer = partition_metrics(committed).write.mode("overwrite")
+    if is_table:
+        writer.saveAsTable(output + "_metrics")
+        metrics = spark.read.table(output + "_metrics")
+    else:
+        writer.parquet(output.rstrip("/") + "_metrics")
+        metrics = spark.read.parquet(output.rstrip("/") + "_metrics")
     rollup = metrics.agg(
         F.sum("rows").alias("rows"),
         F.sum("bytes").alias("bytes"),
         F.sum("errors").alias("errors"),
     ).first()
-    if is_table:
-        metrics.write.mode("overwrite").saveAsTable(output + "_metrics")
-    else:
-        metrics.write.mode("overwrite").parquet(output.rstrip("/") + "_metrics")
     return {
         "rows": rollup["rows"],
         "bytes": rollup["bytes"],

@@ -8,6 +8,7 @@ AQE) rather than local-only shortcuts.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -20,40 +21,40 @@ def build_session(
 ) -> SparkSession:
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(2 * cpus, 32)
-    b = (
-        SparkSession.builder.appName(app_name)
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.default.parallelism", str(2 * cpus))
+    confs = {
+        "spark.app.name": app_name,
+        "spark.master": f"local[{cpus}]",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.default.parallelism": str(2 * cpus),
         # AQE: runtime coalescing + skew splitting; advisory size tuned for
         # parse tasks dominated by html payload bytes.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64m",
         # Arrow path for pandas UDFs: the engine's hot loop. 8192-row batches
         # measured ~1.5x faster end-to-end than 2048 on mixed web documents
         # (fewer batch boundaries; ~20 MB max batch at 2.6 KB avg docs).
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "8192",
         # pandas UDFs that return large parse structs: cap batch bytes not
         # just rows, so a batch of 38 KB documents still fits comfortably.
-        .config("spark.sql.execution.arrow.pyspark.fallback.enabled", "false")
-        .config("spark.sql.files.maxPartitionBytes", "128m")
+        "spark.sql.execution.arrow.pyspark.fallback.enabled": "false",
+        "spark.sql.files.maxPartitionBytes": "128m",
         # local mode = ONE JVM hosting the driver AND all executor threads:
-    # 8g was tight for 32 concurrent tasks of join/agg state plus
-    # broadcasts (the r6 driver bench crashed one sf1.0 suite run mid-
-    # flight). 24g on this 128 GiB box leaves the Python workers ~100 GiB;
-    # on a real cluster this setting maps to per-executor heap instead.
-    .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        # 8g was tight for 32 concurrent tasks of join/agg state plus
+        # broadcasts (the r6 driver bench crashed one sf1.0 suite run mid-
+        # flight). 24g on this 128 GiB box leaves the Python workers ~100 GiB;
+        # on a real cluster this setting maps to per-executor heap instead.
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "24g"),
         # Codegen-heavy mixed workloads (parse UDF stages + wide hash aggs +
         # banded joins) overflow the JVM's default 240 MB code cache; once it
         # fills, JITed whole-stage code gets evicted and later queries run
         # 3-5x slower until re-compiled (measured: minhash_lsh 33 s -> 9 s
         # right after a 50k-doc parse). Same flag belongs on
         # spark.executor.extraJavaOptions on a real cluster.
-        .config("spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=1g")
-        .config("spark.executor.extraJavaOptions", "-XX:ReservedCodeCacheSize=1g")
+        "spark.driver.extraJavaOptions": "-XX:ReservedCodeCacheSize=1g",
+        "spark.executor.extraJavaOptions": "-XX:ReservedCodeCacheSize=1g",
         # The generated-CLASS cache (Janino output, static conf) defaults to
         # 100 entries — smaller than one pass over this engine's query
         # shapes, so a multi-query session evicts and re-compiles
@@ -66,10 +67,28 @@ def build_session(
         # Shape-count-dependent, not scale- or local-mode-dependent; the
         # same setting belongs on any long-lived session running this
         # engine's full operator surface.
-        .config("spark.sql.codegen.cache.maxEntries", "5000")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-    )
-    for k, v in (extra or {}).items():
+        "spark.sql.codegen.cache.maxEntries": "5000",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.ui.enabled": "false",
+    }
+    confs.update(extra or {})
+    b = SparkSession.builder
+    for k, v in confs.items():
         b = b.config(k, v)
-    return b.getOrCreate()
+    running = SparkSession.getActiveSession()
+    spark = b.getOrCreate()
+    if running is not None:
+        # getOrCreate() returned the running session and applied only its
+        # runtime SQL confs; static and core confs kept their values. Say so.
+        # (A new session takes every conf, some in normalized form, e.g. a
+        # qualified warehouse path, so it is not compared.)
+        for k, v in confs.items():
+            got = spark.conf.get(k, None)
+            if got != str(v):
+                warnings.warn(
+                    f"build_session: {k}={v!r} did not take effect, the "
+                    f"running session keeps {got!r} (static confs apply "
+                    f"only to a new session)",
+                    stacklevel=2,
+                )
+    return spark

@@ -4,6 +4,7 @@ oversize guard — against a temp parquet sink."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 
 @pytest.fixture()
@@ -79,7 +80,9 @@ def test_run_job_and_resume(spark, pages_dir, tmp_path):
     assert committed.count() == 64
     assert committed.select("url").distinct().count() == 64
     metrics = spark.read.parquet(out_dir.rstrip("/") + "_metrics")
-    assert metrics.agg({"rows": "sum"}).first()[0] == 64
+    rollup = metrics.agg(F.sum("rows"), F.sum("bytes"), F.sum("errors")).first()
+    assert m2 == {"rows": rollup[0], "bytes": rollup[1], "errors": rollup[2]}
+    assert m2["rows"] == 64
 
 
 def test_resume_processes_only_new(spark, pages_dir, tmp_path):
@@ -133,7 +136,9 @@ def test_run_job_table_branch_and_resume(spark, pages_dir):
         assert committed.count() == 96
         assert committed.select("url").distinct().count() == 96
         metrics = spark.read.table(out + "_metrics")
-        assert metrics.agg({"rows": "sum"}).first()[0] == 96
+        rollup = metrics.agg(F.sum("rows"), F.sum("bytes"), F.sum("errors")).first()
+        assert m3 == {"rows": rollup[0], "bytes": rollup[1], "errors": rollup[2]}
+        assert m3["rows"] == 96
     finally:
         for t in (src, out, out + "_metrics"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")

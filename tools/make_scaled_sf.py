@@ -37,10 +37,6 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 
-def _rep(table: pa.Table, k: int) -> dict:
-    return table.to_pandas()
-
-
 def main() -> None:
     src, dst, k = Path(sys.argv[1]), Path(sys.argv[2]), int(sys.argv[3])
     dst.mkdir(parents=True, exist_ok=True)
@@ -55,7 +51,7 @@ def main() -> None:
         c = d.copy()
         c["doc_id"] = c["doc_id"] + n * r
         if r > 0:
-            toks = c["text"].str.split(" ", n=1)
+            toks = c["text"].fillna("").str.split(" ", n=1)
             c["text"] = [
                 f"r{r}x{i} " + (t[1] if len(t) > 1 else "")
                 for i, t in zip(c["doc_id"], toks)

@@ -48,7 +48,7 @@ def _read_steal() -> tuple[int, int]:
 
 
 def _jvm_probe(spark):
-    """GC ms, JIT compile ms, code-cache used bytes, storage RDD block count."""
+    """GC ms, JIT compile ms, code-cache and heap used MB, persistent RDD count."""
     jvm = spark.sparkContext._jvm
     mf = jvm.java.lang.management.ManagementFactory
     gc_ms = 0
@@ -63,19 +63,12 @@ def _jvm_probe(spark):
     for p in mf.getMemoryPoolMXBeans():
         if "CodeHeap" in p.getName() or "Code Cache" in p.getName():
             code_used += p.getUsage().getUsed()
-    try:
-        n_blocks = (
-            spark.sparkContext._jsc.sc().getExecutorMemoryStatus().size()
-        )  # cheap liveness probe only
-        rdd_blocks = len(spark.sparkContext._jsc.sc().getPersistentRDDs())
-    except Exception:
-        n_blocks, rdd_blocks = -1, -1
     return {
         "gc_ms": int(gc_ms),
         "jit_ms": int(jit_ms),
         "code_cache_mb": round(code_used / 1048576.0, 1),
         "heap_used_mb": round(heap_used / 1048576.0, 1),
-        "persistent_rdds": rdd_blocks,
+        "persistent_rdds": spark.sparkContext._jsc.getPersistentRDDs().size(),
     }
 
 
