@@ -1730,7 +1730,7 @@ def _link_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared per-anchor rows (with the source url) for every webgraph
     gate. The single-file parquet arrives as ONE partition, so the pages
     are url-hash-repartitioned BEFORE the row-multiplying extract_links
-    walk (CLAUDE.md: _spread before row-multiplying ops) — the same
+    walk (CLAUDE.md: spread before row-multiplying ops) — the same
     bucketing entry() uses."""
     from tempeh_spark.links import extract_links
 
@@ -2351,14 +2351,14 @@ def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     only shuffle over data rows is the map-side-combined
     (source, register) agg, bounded at 256 rows per source per mapper."""
     from tempeh_spark.corpusops import hll_distinct
-    from tempeh_spark.partitioning import spread_if_narrow
+    from tempeh_spark.partitioning import ROW_MULTIPLYING, spread_if_narrow
     from tempeh_spark.textops import normalize_text
 
     docs = _docs(spark, sf_dir)
     # spread BEFORE the ~300x gram explode: the single-footer scan would
     # otherwise run both shingle legs' explode + partial aggs on one core
     # (measured 14.6 s at sf1.0; the aggs themselves are bounded)
-    base = spread_if_narrow(docs, "doc_id").select(
+    base = spread_if_narrow(docs, "doc_id", ROW_MULTIPLYING).select(
         "source", normalize_text("text").alias("t")
     )
     grams = (
@@ -2472,13 +2472,13 @@ def q_cms_hot_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-sized by construction. Tokenization is the engine-common
     whitespace class (textops.WS), the same twin bm25_topk uses."""
     from tempeh_spark.freqsketch import cms_estimate, cms_sketch
-    from tempeh_spark.partitioning import spread_if_narrow
+    from tempeh_spark.partitioning import ROW_MULTIPLYING, spread_if_narrow
     from tempeh_spark.textops import WS
 
     # spread BEFORE the token explode (three consumers re-derive this
     # subtree: sketch, estimate probe, exact counts — all were single-core
     # off the one-partition scan; measured 16.6 s at sf1.0)
-    docs = spread_if_narrow(_docs(spark, sf_dir), "doc_id")
+    docs = spread_if_narrow(_docs(spark, sf_dir), "doc_id", ROW_MULTIPLYING)
     toks = docs.select(
         F.explode(
             F.array_remove(F.split(F.lower(F.col("text")), rf"[{WS}]+"), "")

@@ -222,9 +222,3 @@ def combine_surrogates(s: str) -> str:
         "utf-16-le", errors="surrogatepass"
     )
 
-
-def units_to_str(units: np.ndarray) -> str:
-    """Legacy helper (kept for tests): unit array → JS-semantics string."""
-    if getattr(units, "size", len(units)) == 0:
-        return ""
-    return combine_surrogates("".join(chr(int(u)) for u in units))

@@ -25,7 +25,7 @@ Scale notes (the whole point of these being Spark-first):
   bucketed/ANN forms in similarity.py for the scale path.
 
 Inputs arriving as a single parquet footer are re-spread before any
-row-multiplying transform (see ``_spread``).
+row-multiplying transform (``partitioning.spread_if_narrow``).
 """
 
 from __future__ import annotations
@@ -33,18 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tempeh_spark.partitioning import ROW_MULTIPLYING, spread_if_narrow
 from tempeh_spark.textops import normalize_text
-
-
-def _spread(df: DataFrame, id_col: str, mult: int = 2) -> DataFrame:
-    """Hash-repartition on the id BEFORE row-multiplying transforms.
-
-    Small-file inputs (one parquet footer) arrive as a single partition; an
-    explode that multiplies rows 10^3-10^4x must never inherit that, or the
-    whole expansion runs in one task. At cluster scale this also co-locates
-    each document's expanded rows for the map-side combine."""
-    sc = df.sparkSession.sparkContext
-    return df.repartition(sc.defaultParallelism * mult, F.col(id_col))
 
 
 def exact_dedup_clusters(
@@ -77,7 +67,9 @@ def shingle_rows(
     norm = normalize_text(text_col)
     if max_chars is not None:
         norm = F.substring(norm, 1, max_chars)
-    base = _spread(df, id_col).select(F.col(id_col).alias("id"), norm.alias("t"))
+    base = spread_if_narrow(df, id_col, ROW_MULTIPLYING).select(
+        F.col(id_col).alias("id"), norm.alias("t")
+    )
     # Docs shorter than ngram yield NO shingles. Without this filter,
     # sequence(1, len-n+1) for len < n is sequence(1, 0) == [1, 0]
     # (Spark sequences run DESCENDING when end < start), fabricating a
@@ -381,7 +373,7 @@ def simhash_table(
     """
     if bits % 4 != 0 or not 4 <= bits <= 60:
         raise ValueError("bits must be a multiple of 4 in [4, 60]")
-    base = _spread(df, id_col)
+    base = spread_if_narrow(df, id_col, ROW_MULTIPLYING)
     norm = normalize_text(text_col)
     # explode-then-where, not F.filter(...)-then-explode: the array filter
     # is an interpreted HOF per document (CLAUDE.md invariant); the post-
@@ -413,30 +405,6 @@ def simhash16_table(
 ) -> DataFrame:
     """16-bit form (the original gate surface); see simhash_table."""
     return simhash_table(df, id_col, text_col, bits=16)
-
-
-def simhash16(text_col: str = "text") -> Column:
-    """16-bit SimHash over whitespace tokens: per-token md5-derived 16-bit
-    hash, per-bit +-1 vote, sign -> bit. Column form (interpreted
-    higher-order functions — fine per-row, use simhash16_table at scale)."""
-    norm = normalize_text(text_col)
-    toks = F.array_remove(F.split(norm, " "), "")
-    tok_hash = lambda t: F.conv(F.substring(F.md5(F.encode(t, "UTF-8")), 1, 4), 16, 10).cast(
-        "int"
-    )
-    bits = []
-    for b in range(16):
-        vote = F.aggregate(
-            toks,
-            F.lit(0),
-            lambda acc, t: acc
-            + F.when(F.shiftright(tok_hash(t), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
-        )
-        bits.append(F.when(vote > 0, F.lit(1 << b)).otherwise(F.lit(0)))
-    total = bits[0]
-    for bb in bits[1:]:
-        total = total + bb
-    return total
 
 
 def _band_ranges(bits: int, bands: int) -> list[tuple[int, int]]:
@@ -815,66 +783,22 @@ def embedding_near_pairs(
     """Embedding near-duplicates: cosine >= threshold pairs (exact).
 
     For 10^12-scale use similarity.ivf_topk-style bucketing first; this
-    exact form is the verifier/oracle path.
+    exact form is the verifier/oracle path. Ids must be integral (any
+    width; emitted as BIGINT) — anything else raises ``TypeError`` here,
+    before any job runs.
     """
-    from pyspark.sql.types import LongType
+    from pyspark.sql.types import IntegralType
 
-    from tempeh_spark.vecmath import cosine, role_pair_kernel
+    from tempeh_spark.vecmath import blocked_pairs
 
-    if not isinstance(df.schema[id_col].dataType, LongType):
-        # non-long ids: keep the theta-join reference form (no gated or
-        # bench path uses one — belt for exotic callers)
-        df = _spread(df, id_col, mult=2)
-        v = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-        a = v.alias("a")
-        b = v.alias("b")
-        return (
-            a.join(b, F.col("a.id") < F.col("b.id"))
-            .select(
-                F.col("a.id").alias("id_a"),
-                F.col("b.id").alias("id_b"),
-                (F.round(cosine(F.col("a.vec"), F.col("b.vec")), 4) + F.lit(0.0)).alias(
-                    "cosine"
-                ),
-            )
-            .where(F.col("cosine") >= threshold)
+    if not isinstance(df.schema[id_col].dataType, IntegralType):
+        raise TypeError(
+            f"embedding_near_pairs needs integral ids; {id_col!r} is "
+            f"{df.schema[id_col].dataType.simpleString()}"
         )
-    # Blocked all-pairs: the r6 theta-join (BroadcastNestedLoopJoin -> N^2
-    # joined rows, each shipping TWO vectors through Arrow per pair) paid
-    # ~1 KB of Python-boundary traffic per pair — 64 s at 20k vectors.
-    # Instead: split the a-side into B id-hash blocks, replicate the corpus
-    # to every block (shuffle = (B+1) * N vector rows, ~350 MB at 20k x B=32
-    # vs ~200 GB of joined-row traffic), and compute each block's pair grid
-    # in ONE blocked NumPy pass per task (vecmath._pair_block — bit-identical
-    # sequential-over-dim accumulation). The upstream (possibly an expensive
-    # featurizer) is localCheckpointed once instead of recomputed per side.
+    # The upstream (possibly an expensive featurizer) is localCheckpointed
+    # once instead of recomputed for both sides of the blocked scaffold.
     # Still O(N^2) compute BY DESIGN (this is the exact verifier; the scale
     # path is similarity.embedding_lsh_near_pairs).
-    v = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    sc = df.sparkSession.sparkContext
-    n_blocks = max(8, sc.defaultParallelism)
-    v = v.localCheckpoint(eager=False)
-    a = v.select(
-        F.pmod(F.xxhash64("id"), F.lit(n_blocks)).cast("int").alias("blk"),
-        F.lit(0).alias("role"),
-        "id",
-        "vec",
-    )
-    b = v.select(
-        F.explode(
-            F.sequence(F.lit(0), F.lit(n_blocks - 1))
-        ).alias("blk"),
-        F.lit(1).alias("role"),
-        "id",
-        "vec",
-    )
-    pairs = (
-        a.unionByName(b)
-        .groupBy("blk")
-        .applyInPandas(role_pair_kernel(threshold), "id_a long, id_b long, cosine double")
-    )
-    return pairs.select(
-        "id_a",
-        "id_b",
-        (F.round("cosine", 4) + F.lit(0.0)).alias("cosine"),
-    ).where(F.col("cosine") >= threshold)
+    v = df.select(F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec"))
+    return blocked_pairs(v.localCheckpoint(eager=False), threshold)

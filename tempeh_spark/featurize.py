@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tempeh_spark.dedup import _spread
+from tempeh_spark.partitioning import ROW_MULTIPLYING, spread_if_narrow
 from tempeh_spark.textops import normalize_text
 
 
@@ -60,7 +60,9 @@ def text_embedding(
     norm = normalize_text(text_col)
     if max_chars is not None:
         norm = F.substring(norm, 1, max_chars)
-    base = _spread(df, id_col).select(F.col(id_col).alias("id"), norm.alias("t"))
+    base = spread_if_narrow(df, id_col, ROW_MULTIPLYING).select(
+        F.col(id_col).alias("id"), norm.alias("t")
+    )
     # multiplicity KEPT (bag, not set): no distinct — contrast shingle_rows.
     # Same short-doc guard: sequence(1, end<1) runs descending in Spark.
     pos = base.where(F.length("t") >= ngram).select(

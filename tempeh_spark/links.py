@@ -94,12 +94,12 @@ def extract_links(
 ) -> DataFrame:
     """Explode each document into its outlinks (see module docstring)."""
 
-    from tempeh_spark.partitioning import spread_if_narrow
+    from tempeh_spark.partitioning import ROW_MULTIPLYING, spread_if_narrow
     from tempeh_spark.udf import _sanitize
 
     # one scan partition would run the whole DOM walk on one core
     # (measured: 6.0 s -> sub-second at sf1.0's 50k docs on local[32])
-    df = spread_if_narrow(df, id_col)
+    df = spread_if_narrow(df, id_col, ROW_MULTIPLYING)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

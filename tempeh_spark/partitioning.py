@@ -1,50 +1,79 @@
-"""Input-spread helper for Python-heavy / row-multiplying operators.
+"""The one input-spread helper for Python-heavy / row-multiplying operators.
 
 Single-file parquet inputs arrive as ONE scan partition (CLAUDE.md gotcha),
-so a mapInPandas DOM walk or a 300x shingle explode downstream runs on one
-core. ``spread_if_narrow`` hash-repartitions such inputs — but ONLY when
-the incoming plan is actually narrow: at crawl scale the input is
-thousands of splits already, and an unconditional repartition there would
-shuffle the whole corpus (including heavy payload columns) for nothing.
-The partition count comes from the physical plan (no job is run).
+so a shingle explode, a mapInPandas DOM walk or an Arrow scoring pass
+downstream runs on one core. ``spread_if_narrow`` hash-repartitions such
+inputs — but ONLY when the incoming plan is actually narrow: at crawl scale
+the input is thousands of splits already, and an unconditional repartition
+there would shuffle the whole corpus (including heavy payload columns) for
+nothing.
 
-The target count is sized by SOURCE BYTES (~192 KB of parquet per
-partition, floor 8, cap 2x defaultParallelism), not a flat core multiple:
-every partition of a Python-boundary stage pays a fixed worker round-trip
-(~10 ms), and a flat 128-way spread of a 0.6 MB table measured +0.9 s on
-pdf_extract and +1.1 s on cms_hot_tokens at sf0.1 — pure task overhead.
-At sf1.0 (5.9 MB) the same rule lands at ~31 partitions, one wave on 32
-cores. When the plan has no file source (in-memory test frames), the cap
-is used.
+Building the plan runs no Spark job. A plan that already contains a
+shuffle is planned as an ``AdaptiveSparkPlanExec``; its partition count is
+only known after AQE runs the upstream stages, so such inputs (the output
+of an aggregation or of an earlier spread) are returned as they are. Any
+other plan reports its partition count without executing.
+
+The target count is sized by SOURCE BYTES (read through the Hadoop
+``FileSystem`` API, so s3/hdfs inputs size the same way as local files),
+clamped to ``[floor, 2 x defaultParallelism]``. Every partition of a
+Python-boundary stage pays a fixed worker round-trip, so the bytes per
+partition depend on what the caller does per row — one of two profiles:
+
+* ``ROW_MULTIPLYING`` (~192 KB per partition, floor 8) for explodes, DOM
+  walks and PDF stages, whose work per input byte is large. A flat 128-way
+  spread of a 0.6 MB table measured +0.9 s on pdf_extract and +1.1 s on
+  cms_hot_tokens at sf0.1 — pure task overhead.
+* ``PER_ROW`` (~2 MB per partition, floor 2) for vector scoring, which does
+  not multiply rows: spreading a 1 MB embeddings table over 128 partitions
+  cost ~1 s of task overhead for zero parallelism gain (brute_topk 1.9 s ->
+  0.6 s at sf0.1), and the 192 KB profile measured brute_topk +16%,
+  lsh_topk +27%, ann_recall +47% on 4 cores.
+
+When the plan has no file source (in-memory frames), the cap is used.
 """
 
 from __future__ import annotations
 
-import os
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def spread_if_narrow(df: DataFrame, key_col: str, bytes_per_part: int = 192 << 10) -> DataFrame:
+class SpreadProfile(NamedTuple):
+    bytes_per_part: int
+    floor: int
+
+
+ROW_MULTIPLYING = SpreadProfile(192 << 10, 8)
+PER_ROW = SpreadProfile(2 << 20, 2)
+
+
+def _source_bytes(df: DataFrame) -> int:
+    """Total size of the files the plan scans (0 for in-memory frames)."""
+    jvm = df.sparkSession._jvm
+    conf = df.sparkSession._jsc.hadoopConfiguration()
+    total = 0
+    for uri in df.inputFiles():
+        path = jvm.org.apache.hadoop.fs.Path(uri)
+        total += path.getFileSystem(conf).getFileStatus(path).getLen()
+    return total
+
+
+def spread_if_narrow(df: DataFrame, key_col: str, profile: SpreadProfile) -> DataFrame:
+    """``df`` hash-repartitioned on ``key_col`` when its scan is narrower
+    than the cluster, else ``df`` itself. Plan-only: runs no Spark job."""
+    qe = df._jdf.queryExecution()
+    if qe.executedPlan().getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        return df
     sc = df.sparkSession.sparkContext
-    cap = sc.defaultParallelism * 2
-    try:
-        cur = df.rdd.getNumPartitions()
-    except Exception:
-        cur = 1
+    cur = qe.toRdd().getNumPartitions()
     if cur >= sc.defaultParallelism:
         return df
-    target = cap
-    try:
-        paths = [
-            f.removeprefix("file://").removeprefix("file:") for f in df.inputFiles()
-        ]
-        total = sum(os.path.getsize(p) for p in paths if os.path.exists(p))
-        if total > 0:
-            target = max(8, min(cap, total // bytes_per_part + 1))
-    except Exception:
-        pass
+    cap = sc.defaultParallelism * 2
+    total = _source_bytes(df)
+    target = max(profile.floor, min(cap, total // profile.bytes_per_part + 1)) if total else cap
     if target <= cur:
         return df
     return df.repartition(target, F.col(key_col))

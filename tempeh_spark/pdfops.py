@@ -326,11 +326,11 @@ def build_pdf_column(
     """documents -> (doc_id, pdf binary): the deterministic synthetic PDF
     corpus (Arrow-batched; the writer is pure Python + zlib)."""
 
-    from tempeh_spark.partitioning import spread_if_narrow
+    from tempeh_spark.partitioning import ROW_MULTIPLYING, spread_if_narrow
 
     # single-footer parquet = one partition = the whole PDF build AND the
     # downstream extract (which inherits this partitioning) on one core
-    df = spread_if_narrow(df, id_col)
+    df = spread_if_narrow(df, id_col, ROW_MULTIPLYING)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf_batch in batches:
@@ -350,9 +350,9 @@ def extract_pdf_text(
     """(doc_id, text, n_streams, error): per-row error channel, never a job
     abort — same contract as the HTML parse UDF."""
 
-    from tempeh_spark.partitioning import spread_if_narrow
+    from tempeh_spark.partitioning import ROW_MULTIPLYING, spread_if_narrow
 
-    df = spread_if_narrow(df, id_col)
+    df = spread_if_narrow(df, id_col, ROW_MULTIPLYING)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf_batch in batches:

@@ -58,11 +58,11 @@ def bm25_topk(
     (query_id, rank, doc_id, score_units) with score in 1e-6 units;
     ties broken by ascending doc id for rerun stability."""
     spark = SparkSession.getActiveSession()
-    from tempeh_spark.partitioning import spread_if_narrow
+    from tempeh_spark.partitioning import ROW_MULTIPLYING, spread_if_narrow
 
     # toks feeds dls AND the probe join; a one-partition scan runs both
     # token explodes on one core
-    df = spread_if_narrow(df, id_col)
+    df = spread_if_narrow(df, id_col, ROW_MULTIPLYING)
     qdf = F.broadcast(
         spark.createDataFrame(queries, "query_id string, term string").distinct()
     )

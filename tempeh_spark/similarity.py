@@ -28,9 +28,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from tempeh_spark.partitioning import PER_ROW, spread_if_narrow
 from tempeh_spark.vecmath import (
     _hyperplane,
     band_buckets_udf,
+    blocked_pairs,
+    bucket_pair_kernel,
     masked_cosine_udf,
 )
 from tempeh_spark.vecmath import cosine as _batch_cosine
@@ -45,32 +48,6 @@ def cosine(x: Column, y: Column) -> Column:
     return _batch_cosine(x, y)
 
 
-def _spread(df: DataFrame, id_col: str, mult: int = 2) -> DataFrame:
-    """Single-footer parquet inputs arrive as one partition; repartition the
-    corpus side so downstream scoring fans out.
-
-    Partition count is sized by INPUT BYTES (~2 MB per partition, capped at
-    defaultParallelism * mult), not blindly at the cap: embedding operators
-    don't multiply rows (unlike dedup's shingle explodes), and every
-    ArrowEvalPython task pays a fixed Python round-trip cost, so spreading a
-    1 MB table across 128 partitions costs ~1 s of pure task overhead for
-    zero parallelism gain (measured: brute_topk 1.9 s -> 0.6 s at sf0.1).
-    At cluster scale the cap keeps the big-input behavior identical."""
-    sc = df.sparkSession.sparkContext
-    cap = sc.defaultParallelism * mult
-    n = cap
-    try:
-        import os
-
-        paths = [f.removeprefix("file://").removeprefix("file:") for f in df.inputFiles()]
-        total = sum(os.path.getsize(p) for p in paths if os.path.exists(p))
-        if total > 0:
-            n = max(2, min(cap, total // (2 << 20) + 1))
-    except Exception:
-        pass
-    return df.repartition(n, F.col(id_col))
-
-
 def brute_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -79,7 +56,7 @@ def brute_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k by cosine for every query vector (self-matches excluded)."""
-    corpus = _spread(corpus, id_col)
+    corpus = spread_if_narrow(corpus, id_col, PER_ROW)
     c = corpus.select(F.col(id_col).alias("nbr_id"), F.col(vec_col).alias("nbr_vec"))
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
     scored = c.join(F.broadcast(q), F.col("query_id") != F.col("nbr_id")).select(
@@ -104,7 +81,7 @@ def ivf_topk(
     cell_col: str = "label",
 ) -> DataFrame:
     """ANN top-k searching only the query's coarse cell (inverted file)."""
-    corpus = _spread(corpus, id_col)
+    corpus = spread_if_narrow(corpus, id_col, PER_ROW)
     c = corpus.select(
         F.col(id_col).alias("nbr_id"), F.col(vec_col).alias("nbr_vec"), F.col(cell_col).alias("cell")
     )
@@ -183,7 +160,7 @@ def ivf_multiprobe_topk(
     # spread FIRST: ivf_centroids posexplodes every vector (row x dim), and
     # a single-footer parquet corpus would run that whole explode+agg in
     # one task (CLAUDE.md rule)
-    corpus = _spread(corpus, id_col)
+    corpus = spread_if_narrow(corpus, id_col, PER_ROW)
     cents = ivf_centroids(corpus, vec_col, cell_col)
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
     probe_w = Window.partitionBy("query_id").orderBy(
@@ -238,7 +215,7 @@ def lsh_signature(
     independent hash families per band from the same deterministic stream.
 
     Interpreted-HOF reference form — corpus-scaling callers use
-    ``vecmath.banded_buckets`` (one Arrow pass for ALL bands, same bits)."""
+    ``vecmath.band_buckets_udf`` (one Arrow pass for ALL bands, same bits)."""
     bits = []
     for p in range(n_planes):
         plane = F.array(*[F.lit(x) for x in _hyperplane(dim, plane_offset + p)])
@@ -265,7 +242,7 @@ def embedding_lsh_near_pairs(
     Candidates are pairs sharing a full band signature in ANY of ``n_bands``
     disjoint hyperplane bands: an equi-join on ``(band, bucket)``, never an
     all-pairs scan (contrast ``dedup.embedding_near_pairs``, the exact
-    verifier, whose theta-join is all-pairs by design). Verification is
+    verifier, which is all-pairs by design). Verification is
     exact cosine on the candidates only.
 
     Recall math (random hyperplanes): a pair at angle theta collides in one
@@ -279,7 +256,7 @@ def embedding_lsh_near_pairs(
       intrinsically unselective — candidates approach all-pairs).
 
     The per-vector signature cost (n_bands * planes_per_band dot products)
-    is one Arrow-batched NumPy pass (``vecmath.banded_buckets``) —
+    is one Arrow-batched NumPy pass (``vecmath.band_buckets_udf``) —
     embarrassingly parallel and shuffle-free; the only shuffles are the
     band equi-join and the final dropDuplicates.
 
@@ -298,7 +275,7 @@ def embedding_lsh_near_pairs(
     oracle stays exact at any recall because it twins the identical
     candidate restriction.
     """
-    v = _spread(corpus, id_col).select(
+    v = spread_if_narrow(corpus, id_col, PER_ROW).select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
     )
     # materialize v ONCE: this subtree feeds FIVE consumers (both sides of
@@ -342,8 +319,6 @@ def embedding_lsh_near_pairs(
     # in k bands is scored k times in-kernel (pure vectorized flops, no rows)
     # and deduplicated AFTER the exact rounded filter — values identical,
     # survivor set identical.
-    from tempeh_spark.vecmath import bucket_pair_kernel
-
     if n_bands * planes_per_band <= 63:
         # DENSE regime (few, wide buckets — candidates approach all-pairs,
         # and low-plane signatures pack into one int64): run the blocked
@@ -357,7 +332,7 @@ def embedding_lsh_near_pairs(
         # signatures, e.g. 12x16) keep the per-bucket segment kernel
         # below, where candidates are sparse and all-pairs would be
         # quadratic waste.
-        return _dense_banded_pairs(v, threshold, dim, n_bands, planes_per_band, mu)
+        return blocked_pairs(v, threshold, bands=(dim, n_bands, planes_per_band, mu))
 
     probe = v.select(
         "id",
@@ -383,44 +358,6 @@ def embedding_lsh_near_pairs(
         .where(F.col("cosine") >= threshold)
         .dropDuplicates(["id_a", "id_b"])
     )
-
-
-def _dense_banded_pairs(
-    v: DataFrame, threshold: float, dim: int, n_bands: int,
-    planes_per_band: int, mu,
-) -> DataFrame:
-    """Dense-regime banded pairs: blocked all-pairs kernel with a packed-
-    signature collision mask (see ``embedding_lsh_near_pairs``). ``v`` is
-    the checkpointed (id, vec) table."""
-    from tempeh_spark.vecmath import masked_role_pair_kernel
-
-    sc = v.sparkSession.sparkContext
-    n_blocks = max(8, sc.defaultParallelism)
-    a = v.select(
-        F.pmod(F.xxhash64("id"), F.lit(n_blocks)).cast("int").alias("blk"),
-        F.lit(0).alias("role"),
-        "id",
-        "vec",
-    )
-    b = v.select(
-        F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))).alias("blk"),
-        F.lit(1).alias("role"),
-        "id",
-        "vec",
-    )
-    pairs = (
-        a.unionByName(b)
-        .groupBy("blk")
-        .applyInPandas(
-            masked_role_pair_kernel(threshold, dim, n_bands, planes_per_band, mu),
-            "id_a long, id_b long, cosine double",
-        )
-    )
-    return pairs.select(
-        "id_a",
-        "id_b",
-        (F.round("cosine", 4) + F.lit(0.0)).alias("cosine"),
-    ).where(F.col("cosine") >= threshold)
 
 
 def lsh_bucket_topk(
@@ -456,7 +393,7 @@ def lsh_bucket_topk(
       SHOWS UP as wall-clock win at small Q instead of drowning in
       explode/dedup exchange overhead.
     """
-    corpus = _spread(corpus, id_col)
+    corpus = spread_if_narrow(corpus, id_col, PER_ROW)
 
     if broadcast_queries:
         mc = masked_cosine_udf(dim, n_bands, n_planes)

@@ -28,7 +28,7 @@ import hashlib
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType
@@ -140,12 +140,13 @@ def band_buckets_udf(
     return _buckets
 
 
-def banded_buckets(
-    vec: Column, dim: int, n_bands: int, planes_per_band: int, center=None
-):
-    """(band, bucket) pair columns via posexplode of the one-pass UDF."""
-    return F.posexplode(
-        band_buckets_udf(dim, n_bands, planes_per_band, center)(vec)
+def _empty_pairs() -> pd.DataFrame:
+    return pd.DataFrame(
+        {
+            "id_a": pd.Series([], dtype="int64"),
+            "id_b": pd.Series([], dtype="int64"),
+            "cosine": pd.Series([], dtype="float64"),
+        }
     )
 
 
@@ -215,28 +216,12 @@ def _pair_block(
                 out_b.append(ib[u:v][c])
                 out_c.append(cos[r, c])
     if not out_a:
-        return pd.DataFrame(
-            {
-                "id_a": pd.Series([], dtype="int64"),
-                "id_b": pd.Series([], dtype="int64"),
-                "cosine": pd.Series([], dtype="float64"),
-            }
-        )
+        return _empty_pairs()
     return pd.DataFrame(
         {
             "id_a": np.concatenate(out_a),
             "id_b": np.concatenate(out_b),
             "cosine": np.concatenate(out_c),
-        }
-    )
-
-
-def _empty_pairs() -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "id_a": pd.Series([], dtype="int64"),
-            "id_b": pd.Series([], dtype="int64"),
-            "cosine": pd.Series([], dtype="float64"),
         }
     )
 
@@ -321,68 +306,41 @@ def bucket_pair_kernel(threshold: float, small_max: int = 64):
     return _k
 
 
-def role_pair_kernel(threshold: float):
-    """applyInPandas kernel for the EXACT all-pairs verifier: each group
-    holds one a-block (role 0) plus the full corpus (role 1); emits the
-    a-block's (id_a < id_b) pairs at cosine >= threshold - 1e-4. A pair
-    (x, y), x < y, is emitted exactly once — in x's block, where the
-    id-order mask keeps it; in y's block the mask kills it."""
-    cutoff = threshold - 1e-4
+def role_pair_kernel(threshold: float, bands=None):
+    """applyInPandas kernel of ``blocked_pairs``: each group holds one
+    a-block (role 0) plus the full corpus (role 1); emits the a-block's
+    (id_a < id_b) pairs at cosine >= threshold - 1e-4. A pair (x, y),
+    x < y, is emitted exactly once — in x's block, where the id-order mask
+    keeps it; in y's block the mask kills it.
 
-    def _k(pdf: pd.DataFrame) -> pd.DataFrame:
-        a = pdf[pdf["role"] == 0]
-        b = pdf[pdf["role"] == 1]
-        if len(a) == 0 or len(b) == 0:
-            return _pair_block(
-                np.zeros((0, 1)), np.zeros(0, np.int64),
-                np.zeros((0, 1)), np.zeros(0, np.int64), cutoff,
-            )
-        return _pair_block(
-            np.stack(a["vec"].to_numpy()),
-            a["id"].to_numpy(),
-            np.stack(b["vec"].to_numpy()),
-            b["id"].to_numpy(),
-            cutoff,
-        )
-
-    return _k
-
-
-def masked_role_pair_kernel(
-    threshold: float,
-    dim: int,
-    n_bands: int,
-    planes_per_band: int,
-    center=None,
-):
-    """applyInPandas kernel for the DENSE banded-LSH regime
-    (n_bands * planes_per_band <= 63): each group holds one a-block
-    (role 0) plus the full corpus (role 1); emits (id_a < id_b) pairs that
-    BOTH share at least one hyperplane band AND clear cosine >=
-    threshold - 1e-4. Signatures are computed in-kernel with the exact
-    ``band_buckets_udf`` arithmetic (same sequential plane-dot fold, same
-    >= 0 sign test, optional centering) and packed into one int64, so the
-    collision mask reproduces the (band, bucket) equi-join's candidate
-    set bit-for-bit — but every pair is scored ONCE, instead of once per
+    ``bands=(dim, n_bands, planes_per_band, center)`` additionally requires
+    the pair to share at least one full hyperplane band — the candidate set
+    of the banded (band, bucket) equi-join, bit-for-bit. Signatures are
+    computed in-kernel with the exact ``band_buckets_udf`` arithmetic (same
+    sequential plane-dot fold, same >= 0 sign test, optional centering) and
+    packed into one int64, so every pair is scored ONCE instead of once per
     colliding band in per-bucket groups."""
-    if n_bands * planes_per_band > 63:
-        raise ValueError("packed signatures need n_bands * planes_per_band <= 63")
     cutoff = threshold - 1e-4
-    total = n_bands * planes_per_band
-    planes = np.array([_hyperplane(dim, p) for p in range(total)], dtype=np.float64)
-    weights = (np.int64(1) << np.arange(total, dtype=np.int64))
-    mu = None if center is None else np.asarray(center, dtype=np.float64)
+    packed_sigs = None
+    if bands is not None:
+        dim, n_bands, planes_per_band, center = bands
+        total = n_bands * planes_per_band
+        if total > 63:
+            raise ValueError("packed signatures need n_bands * planes_per_band <= 63")
+        planes = np.array([_hyperplane(dim, p) for p in range(total)], dtype=np.float64)
+        weights = np.int64(1) << np.arange(total, dtype=np.int64)
+        mu = None if center is None else np.asarray(center, dtype=np.float64)
 
-    def _packed_sigs(X: np.ndarray) -> np.ndarray:
-        V = X.astype(np.float64, copy=False)
-        acc = np.zeros((V.shape[0], total), dtype=np.float64)
-        if mu is None:
-            for i in range(dim):
-                acc += V[:, i : i + 1] * planes[:, i]
-        else:
-            for i in range(dim):
-                acc += (V[:, i : i + 1] - mu[i]) * planes[:, i]
-        return ((acc >= 0.0) * weights).sum(axis=1).astype(np.int64)
+        def packed_sigs(X: np.ndarray) -> np.ndarray:
+            V = X.astype(np.float64, copy=False)
+            acc = np.zeros((V.shape[0], total), dtype=np.float64)
+            if mu is None:
+                for i in range(dim):
+                    acc += V[:, i : i + 1] * planes[:, i]
+            else:
+                for i in range(dim):
+                    acc += (V[:, i : i + 1] - mu[i]) * planes[:, i]
+            return ((acc >= 0.0) * weights).sum(axis=1).astype(np.int64)
 
     def _k(pdf: pd.DataFrame) -> pd.DataFrame:
         a = pdf[pdf["role"] == 0]
@@ -391,19 +349,56 @@ def masked_role_pair_kernel(
             return _empty_pairs()
         Xa = np.stack(a["vec"].to_numpy())
         Xb = np.stack(b["vec"].to_numpy())
-        return _pair_block(
-            Xa,
-            a["id"].to_numpy(),
-            Xb,
-            b["id"].to_numpy(),
-            cutoff,
-            sig_a=_packed_sigs(Xa),
-            sig_b=_packed_sigs(Xb),
-            n_bands=n_bands,
-            planes_per_band=planes_per_band,
-        )
+        mask = {}
+        if packed_sigs is not None:
+            mask = dict(
+                sig_a=packed_sigs(Xa),
+                sig_b=packed_sigs(Xb),
+                n_bands=n_bands,
+                planes_per_band=planes_per_band,
+            )
+        return _pair_block(Xa, a["id"].to_numpy(), Xb, b["id"].to_numpy(), cutoff, **mask)
 
     return _k
+
+
+def blocked_pairs(v: DataFrame, threshold: float, bands=None) -> DataFrame:
+    """(id_a, id_b, cosine) for every id_a < id_b pair of the (id BIGINT,
+    vec) table ``v`` with ``round(cosine, 4) >= threshold`` — the one
+    blocked all-pairs scaffold (``bands``: see ``role_pair_kernel``).
+
+    The a-side is split into B id-hash blocks and the corpus replicated to
+    every block (shuffle = (B+1) * N vector rows, ~350 MB at 20k x B=32);
+    each block's pair grid is then ONE tiled NumPy pass (``_pair_block``)
+    per task. A theta-join instead ships two vectors through Arrow per
+    joined pair (~1 KB of Python-boundary traffic per pair: 64 s at 20k
+    vectors, ~200 GB of joined rows). ``v`` is read twice, so callers pass
+    it localCheckpointed."""
+    n_blocks = max(8, v.sparkSession.sparkContext.defaultParallelism)
+    a = v.select(
+        F.pmod(F.xxhash64("id"), F.lit(n_blocks)).cast("int").alias("blk"),
+        F.lit(0).alias("role"),
+        "id",
+        "vec",
+    )
+    b = v.select(
+        F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))).alias("blk"),
+        F.lit(1).alias("role"),
+        "id",
+        "vec",
+    )
+    pairs = (
+        a.unionByName(b)
+        .groupBy("blk")
+        .applyInPandas(
+            role_pair_kernel(threshold, bands), "id_a long, id_b long, cosine double"
+        )
+    )
+    return pairs.select(
+        "id_a",
+        "id_b",
+        (F.round("cosine", 4) + F.lit(0.0)).alias("cosine"),
+    ).where(F.col("cosine") >= threshold)
 
 
 def masked_cosine_udf(dim: int, n_bands: int, planes_per_band: int):

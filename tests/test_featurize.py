@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import math
 
+import pytest
+
 from pyspark.sql import functions as F
 
 
@@ -77,6 +79,24 @@ def test_flows_into_vector_operators(spark):
     # 1 and 2 share almost all shingles; 3 is far from both
     assert (1, 2) in pairs and pairs[(1, 2)] > 0.9
     assert pairs.get((1, 3), 0.0) < pairs[(1, 2)]
+    # integral ids of any width take the same blocked kernel
+    narrow = vecs.select(F.col("vec_id").cast("int").alias("vec_id"), "embedding")
+    assert {
+        (r["id_a"], r["id_b"]): r["cosine"]
+        for r in embedding_near_pairs(narrow, threshold=0.5).collect()
+    } == pairs
+    # non-integral ids are refused before any job runs
+    sc = spark.sparkContext
+    sc.setJobGroup("near-pairs-string-ids", "build only")
+    try:
+        with pytest.raises(TypeError):
+            embedding_near_pairs(
+                vecs.select(F.col("vec_id").cast("string").alias("vec_id"), "embedding"),
+                threshold=0.5,
+            )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("near-pairs-string-ids") == []
 
 
 def test_embedding_dedup_decisions(spark):
