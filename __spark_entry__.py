@@ -2057,9 +2057,12 @@ def q_text_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: featurizer is ONE wide map-side-combinable agg; assignment
     is a broadcast-closure Arrow pass (no shuffle); IVF search streams the
     corpus through one equi-join on cell with queries/centroids broadcast.
-    The two lazy localCheckpoints below materialize the corpus-wide
+    The two localCheckpoints below materialize the corpus-wide
     featurizer + labeling ONCE for their four consumers (the branch-fanout
-    trap: each consumer would otherwise re-run the whole producer subtree)."""
+    trap: each consumer would otherwise re-run the whole producer subtree).
+    They are not lazy: under AQE ``localCheckpoint(eager=False)`` runs the
+    shuffle stages of its input when called, so building this DataFrame
+    runs Spark jobs."""
     from tempeh_spark.clustering import kmeans_assign
     from tempeh_spark.featurize import text_embedding
     from tempeh_spark.similarity import brute_topk, ivf_multiprobe_topk, ivf_topk

@@ -174,7 +174,11 @@ def minhash_signatures_wide(
 
     ``shingles`` lets a caller that already built the (id, g) rows (the
     LSH verify step needs them too) pass them in — without it the dominant
-    normalize+explode+distinct stage would run twice per dedup job."""
+    normalize+explode+distinct stage would run twice per dedup job.
+
+    Without ``shingles`` this function runs Spark jobs while it builds the
+    DataFrame: the shingle rows go through ``localCheckpoint(eager=False)``,
+    and under AQE that call runs their upstream shuffle stages at once."""
     sh = (
         shingles
         if shingles is not None
@@ -243,6 +247,12 @@ def minhash_lsh_pairs(
     pass a persisted shingle table so the dominant normalize+explode+
     distinct stage runs once, not four times — measured 8.0 -> 5.5 s on
     the sf0.1 bench corpus.
+
+    Building this DataFrame runs Spark jobs. Under AQE each
+    ``localCheckpoint(eager=False)`` below (the shingle rows unless
+    ``shingles`` is given, and the candidate pairs) runs the shuffle stages
+    of its input when it is called; only the last stage of each waits for
+    an action.
     """
     if num_perm % bands != 0:
         raise ValueError(
@@ -253,10 +263,11 @@ def minhash_lsh_pairs(
     rows_per_band = num_perm // bands
     # FIVE consumers read the shingle table here (hash dictionary,
     # signature join, per-doc counts, both verify sides): materialize it
-    # once. Lazy localCheckpoint, not persist() — ContextCleaner releases
+    # once. localCheckpoint, not persist() — ContextCleaner releases
     # the blocks when the DataFrame goes out of scope, so repeatedly
     # invoked gates don't leak CacheManager entries (same pattern as
-    # similarity.embedding_lsh_near_pairs).
+    # similarity.embedding_lsh_near_pairs). eager=False does not make it
+    # lazy: the shingle table's shuffle stages run here, at build time.
     sh = (
         shingles
         if shingles is not None
@@ -298,7 +309,8 @@ def minhash_lsh_pairs(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
         # three consumers (the two candidate-doc id lists + the
-        # intersection join): checkpoint so the banded self-join runs once
+        # intersection join): checkpoint so the banded self-join runs once.
+        # Its shuffle stages (signature agg, join) run here, at build time.
         .localCheckpoint(eager=False)
     )
 
@@ -786,6 +798,10 @@ def embedding_near_pairs(
     exact form is the verifier/oracle path. Ids must be integral (any
     width; emitted as BIGINT) — anything else raises ``TypeError`` here,
     before any job runs.
+
+    Building this DataFrame runs Spark jobs when ``df`` has a shuffle (a
+    featurizer output does): the vectors are ``localCheckpoint(eager=False)``-ed,
+    and under AQE that call runs their upstream shuffle stages at once.
     """
     from pyspark.sql.types import IntegralType
 
@@ -797,7 +813,8 @@ def embedding_near_pairs(
             f"{df.schema[id_col].dataType.simpleString()}"
         )
     # The upstream (possibly an expensive featurizer) is localCheckpointed
-    # once instead of recomputed for both sides of the blocked scaffold.
+    # once instead of recomputed for both sides of the blocked scaffold;
+    # that runs its shuffle stages now, while building.
     # Still O(N^2) compute BY DESIGN (this is the exact verifier; the scale
     # path is similarity.embedding_lsh_near_pairs).
     v = df.select(F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec"))

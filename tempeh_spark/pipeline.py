@@ -33,6 +33,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -40,6 +41,7 @@ from tempeh_spark.options import DEFAULT_OPTIONS, ParserOptions
 from tempeh_spark.udf import make_parse_udf
 
 INPUT_COLS = ("url", "warc_ts", "html", "lang")
+SALT_MOD = 16  # sub-bucket salt for hot urls / giant hosts
 
 
 @dataclass(frozen=True)
@@ -47,7 +49,6 @@ class PipelineConfig:
     options: ParserOptions = DEFAULT_OPTIONS
     buckets: int | None = None  # default: 4 * defaultParallelism
     max_html_bytes: int = 64 * 1024 * 1024
-    salt_mod: int = 16  # sub-bucket salt for hot urls / giant hosts
     # False skips the DOM-JSON serialization INSIDE the kernel (~40% of
     # batch cost, udf.py parse_batch) and drops the column — not just a
     # projection prune. The common 100 TB text-only profile wants False.
@@ -85,11 +86,11 @@ def extract_pages(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> Data
     # table carries warc_ts. Unique urls already spread under the hash; the
     # salt is for HOT KEYS — a url re-crawled 10^5 times would otherwise
     # pin all its captures to one task. Salting by (url, warc_ts) spreads a
-    # hot url across up to salt_mod sub-buckets while staying fully
+    # hot url across up to SALT_MOD sub-buckets while staying fully
     # deterministic per row (resume/lineage safe).
     key = F.xxhash64("url", F.lit(17))
-    if cfg.salt_mod > 1 and "warc_ts" in df.columns:
-        key = key + F.pmod(F.xxhash64("url", "warc_ts"), F.lit(cfg.salt_mod))
+    if "warc_ts" in df.columns:
+        key = key + F.pmod(F.xxhash64("url", "warc_ts"), F.lit(SALT_MOD))
     bucketed = guarded.repartition(buckets, F.pmod(key, F.lit(buckets)))
 
     # thread the output flags into the KERNEL: dropping nodes_json/spans at
@@ -140,6 +141,12 @@ def partition_metrics(extracted: DataFrame) -> DataFrame:
     )
 
 
+def _error_condition(e: AnalysisException) -> str:
+    """The exception's error condition (class), or '' when it has none."""
+    get_cls = getattr(e, "getCondition", None) or getattr(e, "getErrorClass", None)
+    return (get_cls() if get_cls else None) or ""
+
+
 def run_extraction_job(
     spark: SparkSession,
     source: str,
@@ -158,8 +165,6 @@ def run_extraction_job(
     is_table = "/" not in output
     done = None
     if resume:
-        from pyspark.errors import AnalysisException
-
         # NARROW first-run detection: only "nothing committed yet" may skip
         # the anti-join. A transient read failure (metastore outage, bad
         # footer, permissions) must FAIL the job — swallowing it would
@@ -168,10 +173,7 @@ def run_extraction_job(
         try:
             done = spark.read.table(output) if is_table else spark.read.parquet(output)
         except AnalysisException as e:
-            get_cls = getattr(e, "getCondition", None) or getattr(
-                e, "getErrorClass", None
-            )
-            cls = (get_cls() if get_cls else None) or ""
+            cls = _error_condition(e)
             fresh = (
                 "TABLE_OR_VIEW_NOT_FOUND" in cls
                 or "PATH_NOT_FOUND" in cls
@@ -194,8 +196,6 @@ def run_extraction_job(
     extracted = extract_pages(pages, cfg)
 
     if is_table:
-        from pyspark.errors import AnalysisException
-
         # DataFrameWriterV2 first: on an Iceberg (or any v2) catalog this
         # append is a snapshot-atomic commit. The sandbox's session catalog
         # only exposes v1 parquet tables, which the v2 writer refuses
@@ -209,10 +209,7 @@ def run_extraction_job(
         try:
             extracted.writeTo(output).append()
         except AnalysisException as e:
-            get_cls = getattr(e, "getCondition", None) or getattr(
-                e, "getErrorClass", None
-            )
-            cls = (get_cls() if get_cls else None) or ""
+            cls = _error_condition(e)
             msg = str(e)
             v1_refusal = "UNSUPPORTED_TABLE_OPERATION" in cls or "v1 table" in msg
             missing = "TABLE_OR_VIEW_NOT_FOUND" in cls or "not found" in msg.lower()

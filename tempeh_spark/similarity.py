@@ -274,6 +274,11 @@ def embedding_lsh_near_pairs(
     shrink to tiny centered norms) — measure per corpus family; the SQL
     oracle stays exact at any recall because it twins the identical
     candidate restriction.
+
+    Building this DataFrame runs Spark jobs. The vectors are
+    ``localCheckpoint(eager=False)``-ed, and under AQE that call runs the
+    shuffle stages of ``corpus`` at once (a featurizer output has them);
+    ``center=True`` adds the mean's collect.
     """
     v = spread_if_narrow(corpus, id_col, PER_ROW).select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
@@ -283,9 +288,10 @@ def embedding_lsh_near_pairs(
     # mean job) — when `corpus` is an expensive upstream like the text
     # featurizer, skipping this re-ran the whole ArrowEvalPython subtree
     # per consumer (measured r6: pipeline_decisions 34-42 s at sf0.1, ~5x
-    # the featurizer cost; ~12 s after). Lazy localCheckpoint, not
-    # persist(): ContextCleaner releases it, repeatedly-invoked gates
-    # don't leak CacheManager entries.
+    # the featurizer cost; ~12 s after). localCheckpoint, not persist():
+    # ContextCleaner releases it, repeatedly-invoked gates don't leak
+    # CacheManager entries. eager=False still runs corpus's shuffle stages
+    # here, at build time.
     v = v.localCheckpoint(eager=False)
     mu = None
     if center:

@@ -80,17 +80,13 @@ def parse_batch(
     options: ParserOptions,
     with_nodes_json: bool = True,
     with_spans: bool = True,
-    with_text: bool = True,
 ) -> pd.DataFrame:
     """The batch kernel: one row per document, columns per PARSED_SCHEMA.
 
     ``with_nodes_json``/``with_spans`` skip the expensive DOM-JSON
     serialization / span materialization (~40% of batch cost) when a
     pipeline only needs extracted text + metrics — the common
-    training-data profile. ``with_text=False`` additionally suppresses the
-    text/main_text output columns (metrics-only profile: full parse compute,
-    counter outputs — used to isolate parse scaling from output-transfer
-    cost in BENCH). The output schema is unchanged (nulls).
+    training-data profile. The output schema is unchanged (nulls).
 
     Accepts BINARY or STRING columns: string rows take the parseString
     contract (TextEncoder-style USV encode, no BOM sniff — see
@@ -115,9 +111,9 @@ def parse_batch(
         ok = r.error is None
         rows.append(
             (
-                _sanitize(ex.text) if ok and with_text else None,
-                _sanitize(ex.main_text) if ok and with_text else None,
-                _sanitize(ex.title) if ok and with_text else None,
+                _sanitize(ex.text) if ok else None,
+                _sanitize(ex.main_text) if ok else None,
+                _sanitize(ex.title) if ok else None,
                 _sanitize(r.nodes_json()) if ok and with_nodes_json else None,
                 [
                     # dom_path carries tag names, which can hold lone
@@ -146,7 +142,6 @@ def make_parse_udf(
     options: ParserOptions = DEFAULT_OPTIONS,
     with_nodes_json: bool = True,
     with_spans: bool = True,
-    with_text: bool = True,
 ):
     """Build the Arrow-batched parse UDF with options baked into the closure."""
     from pyspark.sql.functions import pandas_udf
@@ -156,7 +151,7 @@ def make_parse_udf(
         # Iterator form: per-worker setup (LUT warm-up) is amortized across
         # all batches of a task, and huge tasks stream batch-by-batch.
         for batch in html:
-            yield parse_batch(batch, options, with_nodes_json, with_spans, with_text)
+            yield parse_batch(batch, options, with_nodes_json, with_spans)
 
     return parse_html_udf
 

@@ -372,8 +372,10 @@ def blocked_pairs(v: DataFrame, threshold: float, bands=None) -> DataFrame:
     each block's pair grid is then ONE tiled NumPy pass (``_pair_block``)
     per task. A theta-join instead ships two vectors through Arrow per
     joined pair (~1 KB of Python-boundary traffic per pair: 64 s at 20k
-    vectors, ~200 GB of joined rows). ``v`` is read twice, so callers pass
-    it localCheckpointed."""
+    vectors, ~200 GB of joined rows). ``v`` is read twice; both callers
+    pass it through ``localCheckpoint(eager=False)``, which under AQE runs
+    the shuffle stages of ``v``'s input at that call, so those callers run
+    Spark jobs while building. This function itself runs none."""
     n_blocks = max(8, v.sparkSession.sparkContext.defaultParallelism)
     a = v.select(
         F.pmod(F.xxhash64("id"), F.lit(n_blocks)).cast("int").alias("blk"),

@@ -157,12 +157,12 @@ def test_hot_url_salting_spreads_tasks(spark):
         F.encode(F.lit("<p>hi</p>"), "UTF-8").alias("html"),
         F.lit("en").alias("lang"),
     )
-    out = extract_pages(hot, PipelineConfig(buckets=16, salt_mod=16, with_nodes_json=False))
+    out = extract_pages(hot, PipelineConfig(buckets=16, with_nodes_json=False))
     parts = out.select("partition_id").distinct().count()
     assert parts > 4  # unsalted, all 64 captures would share ONE partition
 
     # determinism: same input -> same partition assignment
-    again = extract_pages(hot, PipelineConfig(buckets=16, salt_mod=16, with_nodes_json=False))
+    again = extract_pages(hot, PipelineConfig(buckets=16, with_nodes_json=False))
     a = sorted(r["partition_id"] for r in out.select("partition_id").collect())
     b = sorted(r["partition_id"] for r in again.select("partition_id").collect())
     assert a == b
