@@ -1865,7 +1865,11 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     scaled-integer arithmetic (webgraph.pagerank_units): ranks are BIGINT
     1e-12 units, every step integer div/multiply — order-independent, so
     the DuckDB twin (the same recurrence unrolled as 3 CTEs) matches
-    bit-for-bit. Self-loops excluded, dangling mass not redistributed."""
+    bit-for-bit. Self-loops excluded, dangling mass not redistributed.
+
+    Eager: building the DataFrame runs the whole PageRank
+    (``pagerank_units`` counts the hosts and checkpoints eagerly; 25 build
+    jobs and 1 action job at sf0.1 in BENCH/profile_sf0.1-local4.json)."""
     from tempeh_spark.webgraph import pagerank_units
 
     return pagerank_units(_link_edges(spark, sf_dir), n_iter=3).select(

@@ -48,9 +48,20 @@ class ParseResult:
 
 
 def dump_nodes(nodes: list) -> str:
-    """Iterative canonical JSON — byte-identical to ``json.dumps(nodes,
-    ensure_ascii=False, separators=(",", ":"))`` but depth-independent
-    (a broken page nested 10^5 deep must not blow the recursion limit)."""
+    """Canonical JSON of a node tree: ``json.dumps(nodes, ensure_ascii=False,
+    separators=(",", ":"))``, one C encoder call per tree. A tree nested too
+    deep for the encoder's recursion limit (a broken page nested 10^5 deep)
+    takes the iterative encoder, which gives the same string at any depth."""
+    try:
+        return json.dumps(nodes, ensure_ascii=False, separators=(",", ":"))
+    except RecursionError:
+        return dump_nodes_iterative(nodes)
+
+
+def dump_nodes_iterative(nodes: list) -> str:
+    """``dump_nodes`` with an explicit stack: depth-independent, and about
+    seven times slower than the one C call (one ``json.dumps`` per node;
+    0.45 vs 0.066 s/MB on crawl-sized pages)."""
 
     def jd(v) -> str:
         return json.dumps(v, ensure_ascii=False, separators=(",", ":"))

@@ -265,7 +265,12 @@ def pagerank_units(
     where out(u) counts u's distinct non-self successors. Hosts without
     in-edges hold ``base``; dangling mass is not redistributed. Every op
     is order-independent (integer SUM) so the result is bit-stable across
-    engines and partitionings — the property the DuckDB twin relies on."""
+    engines and partitionings — the property the DuckDB twin relies on.
+
+    Eager: the call runs the whole PageRank before it returns (the
+    ``hosts.count()`` for N, then ``localCheckpoint(eager=True)`` every 5
+    rounds and on the result, so the caches can be released); the returned
+    DataFrame only reads the checkpoint."""
     # pairs is re-read every iteration (contrib join) — persist it, or each
     # round recomputes the ENTIRE upstream (for crawl input: the HTML parse
     # itself; measured 3x bench cost before this cache)

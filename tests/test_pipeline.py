@@ -166,3 +166,116 @@ def test_hot_url_salting_spreads_tasks(spark):
     a = sorted(r["partition_id"] for r in out.select("partition_id").collect())
     b = sorted(r["partition_id"] for r in again.select("partition_id").collect())
     assert a == b
+
+
+def _log(spark, out_dir):
+    return spark.read.parquet(out_dir.rstrip("/") + "_metrics").orderBy("finished_at").collect()
+
+
+def test_run_metrics_observed_in_the_write_pass(spark, pages_dir, tmp_path):
+    """On a fresh output nothing after the write scans anything: the run's
+    numbers come from an Observation on the write. Each run, the 0-row
+    resume included, appends one row to ``_metrics``, and the returned
+    totals are the sums over those rows."""
+    from perfbench.sparktrace import SparkTracer
+
+    from tempeh_spark.corpus import bench_pages
+    from tempeh_spark.pipeline import PipelineConfig, run_extraction_job
+
+    out_dir = str(tmp_path / "out")
+    cfg = PipelineConfig(buckets=8, with_nodes_json=False)
+    tracer = SparkTracer(spark)
+    with tracer.group("fresh_run") as span:
+        m1 = run_extraction_job(spark, pages_dir, out_dir, cfg)
+    rep = tracer.report(span)
+    write = next(
+        e for e in rep.executions
+        if e.has("Execute InsertIntoHadoopFsRelationCommand") and e.has("ArrowEvalPython")
+    )
+    after = [e for e in rep.executions if e.execution_id > write.execution_id]
+    assert len(after) == 1  # the one-row metrics write
+    assert not any(e.has("Scan") for e in after)
+
+    m2 = run_extraction_job(spark, pages_dir, out_dir, cfg)  # nothing new
+    extra_dir = str(tmp_path / "pages_extra")
+    bench_pages(spark, 96, partitions=4).write.parquet(extra_dir)
+    m3 = run_extraction_job(spark, extra_dir, out_dir, cfg)
+
+    log = _log(spark, out_dir)
+    assert [r["rows"] for r in log] == [64, 0, 32]
+    assert len({r["run_id"] for r in log}) == 3
+    for m, r in zip((m1, m2, m3), log):
+        assert m == {"rows": r["total_rows"], "bytes": r["total_bytes"],
+                     "errors": r["total_errors"]}
+    assert m3 == {k: sum(r[k] for r in log) for k in ("rows", "bytes", "errors")}
+    assert m3["rows"] == 96 and m3["bytes"] > 0
+    assert log[0]["nodes"] > 0 and log[0]["tokens"] > 0 and log[0]["text_chars"] > 0
+    assert log[1]["nodes"] == 0 and log[1]["max_depth"] == 0
+
+
+def test_run_metrics_error_classes(spark, tmp_path):
+    """The per-class error counts of a run equal a group-by of the committed
+    output's error column (classified by the benchmark's own rule)."""
+    from perfbench.workloads import error_class
+
+    from tempeh_spark.pipeline import ERROR_CLASSES, PipelineConfig, run_extraction_job
+
+    src, out_dir = str(tmp_path / "pages"), str(tmp_path / "out")
+    spark.createDataFrame(
+        [
+            ("u/null", None),
+            ("u/big", b"<p>" + b"y" * 1000 + b"</p>"),
+            ("u/decode1", b"<h2>\x80</h2>"),
+            ("u/decode2", b"<p>a\xffb</p>"),
+            ("u/code-point", b"<h2>\xf4\x90\x80\x80</h2>"),
+            ("u/tree", b"<div \xff>"),
+            ("u/ok", b"<p>x</p>"),
+        ],
+        "url string, html binary",
+    ).write.parquet(src)
+    m = run_extraction_job(spark, src, out_dir, PipelineConfig(buckets=4, max_html_bytes=100))
+
+    grouped = dict.fromkeys(ERROR_CLASSES, 0)
+    for r in spark.read.parquet(out_dir).groupBy("error").count().collect():
+        if r["error"] is not None:
+            grouped[error_class(r["error"])] += r["count"]
+    (row,) = _log(spark, out_dir)
+    assert {c: row[f"errors_{c}"] for c in ERROR_CLASSES} == grouped
+    assert grouped == {"oversize": 1, "null_html": 1, "decode": 2, "invalid_code_point": 1,
+                       "tree": 1}
+    assert m == {"rows": 7, "bytes": row["bytes"], "errors": 6} and row["errors"] == 6
+    assert len(row["run_id"]) == 32
+
+
+def test_run_totals_after_files_removed_outside_the_job(spark, pages_dir, tmp_path):
+    """A run whose files are deleted from the output (rolled back) leaves
+    its row in ``_metrics``; the next run's totals still describe the
+    committed output, from the row whose file fingerprint matches or, with
+    no ``_metrics`` at all, from one scan of the output."""
+    import os
+    import shutil
+
+    from tempeh_spark.corpus import bench_pages
+    from tempeh_spark.pipeline import PipelineConfig, run_extraction_job
+
+    out_dir = str(tmp_path / "out")
+    cfg = PipelineConfig(buckets=8, with_nodes_json=False)
+    first = run_extraction_job(spark, pages_dir, out_dir, cfg)
+    kept = set(os.listdir(out_dir))
+    extra_dir = str(tmp_path / "pages_extra")
+    bench_pages(spark, 96, partitions=4).write.parquet(extra_dir)
+    assert run_extraction_job(spark, extra_dir, out_dir, cfg)["rows"] == 96
+    for name in set(os.listdir(out_dir)) - kept:
+        os.remove(os.path.join(out_dir, name))
+
+    again = run_extraction_job(spark, extra_dir, out_dir, cfg)
+    committed = spark.read.parquet(out_dir)
+    assert committed.select("url").distinct().count() == committed.count() == 96
+    assert again["rows"] == 96
+    assert again["bytes"] == committed.agg(F.sum("html_bytes")).first()[0]
+    assert len(_log(spark, out_dir)) == 3
+
+    shutil.rmtree(out_dir + "_metrics")
+    assert run_extraction_job(spark, extra_dir, out_dir, cfg) == again
+    assert [r["rows"] for r in _log(spark, out_dir)] == [0]
+    assert first["rows"] == 64

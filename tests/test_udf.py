@@ -197,3 +197,126 @@ def test_parse_string_usv_semantics():
     assert usv_encode("\udc00\ud800x") == b"\xef\xbf\xbd\xef\xbf\xbdx"
     # leading U+FEFF in a string is content, not a BOM
     assert parse_string("﻿<p>x</p>").extraction.text == "﻿x"
+
+
+# -- old vs new: the Arrow batch builder ------------------------------------
+
+
+def _row_assembly(html, options, with_nodes_json, with_spans):
+    """The oracle: the per-row tuple assembly into a pandas DataFrame that
+    the batch kernel used before it built Arrow arrays directly."""
+    import pandas as pd
+
+    from tempeh_spark.parser import parse_bytes, string_options, usv_encode
+    from tempeh_spark.udf import PARSED_SCHEMA, _sanitize
+
+    str_opts = string_options(options)
+    rows = []
+    for data in html:
+        if data is None:
+            rows.append(
+                (None, None, None, None, None, "null html", None, 0, 0, 0, 0, 0, 0, 0, 0)
+            )
+            continue
+        if isinstance(data, str):
+            b = usv_encode(data)
+            r = parse_bytes(b, str_opts)
+        else:
+            b = bytes(data)
+            r = parse_bytes(b, options)
+        ex = r.extraction
+        ok = r.error is None
+        rows.append(
+            (
+                _sanitize(ex.text) if ok else None,
+                _sanitize(ex.main_text) if ok else None,
+                _sanitize(ex.title) if ok else None,
+                _sanitize(r.nodes_json()) if ok and with_nodes_json else None,
+                [
+                    {"dom_path": _sanitize(p), "l": l, "c": c, "text": _sanitize(t)}
+                    for (p, l, c, t) in ex.spans
+                ]
+                if ok and with_spans
+                else None,
+                _sanitize(r.error) if r.error is not None else None,
+                r.encoding,
+                r.n_tokens,
+                ex.n_nodes,
+                ex.n_elements,
+                ex.n_text_nodes,
+                ex.n_comments,
+                ex.n_attrs,
+                ex.max_depth,
+                len(b),
+            )
+        )
+    return pd.DataFrame(rows, columns=[f.name for f in PARSED_SCHEMA.fields])
+
+
+# one input per error class the kernel reports, plus the clean edge cases
+KERNEL_CASES = [
+    None,  # null html
+    b"",
+    b"<h2>\x80</h2>",  # decode: invalid UTF-8 lead byte
+    b"<h2>\xf4\x90\x80\x80</h2>",  # invalid code point (> U+10FFFF)
+    b"<div \xff>",  # tree error
+    "<p>a\ud800b</p>",  # str input: USV-encoded
+    # UTF-16 with lone surrogates after a tag name (an attribute name) and
+    # in text: they reach span text and nodes_json and need sanitizing
+    b"\xff\xfe" + "<b\udc00>x\ud800</b\udc00><i>y</i>".encode("utf-16-le", "surrogatepass"),
+]
+
+
+def _batches():
+    from hypothesis import strategies as st
+
+    from tests.test_fuzz_reference import ALPHABET, html_strategy
+
+    utf16 = st.text(alphabet=ALPHABET, max_size=60).map(
+        lambda s: b"\xff\xfe" + s.encode("utf-16-le", "surrogatepass")
+    )
+    doc = st.one_of(
+        st.sampled_from(KERNEL_CASES),
+        html_strategy,
+        html_strategy.map(lambda s: s.encode("utf-8", "surrogatepass")),
+        st.binary(max_size=80),
+        utf16,
+    )
+    return st.lists(doc, max_size=10)
+
+
+def test_arrow_builder_equals_row_assembly():
+    """``parse_arrow`` (and its pandas adapter ``parse_batch``) give exactly
+    the old row assembly's values, nulls and types, for every flag pair."""
+    import pandas as pd
+    import pyarrow as pa
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from tempeh_spark.options import DEFAULT_OPTIONS
+    from tempeh_spark.udf import ARROW_SCHEMA, parse_arrow, parse_batch
+
+    def table(df):
+        return pa.Table.from_pandas(df, schema=ARROW_SCHEMA, preserve_index=False)
+
+    @settings(max_examples=150, deadline=None)
+    @given(html=_batches(), with_nodes_json=st.booleans(), with_spans=st.booleans())
+    def check(html, with_nodes_json, with_spans):
+        want = table(_row_assembly(html, DEFAULT_OPTIONS, with_nodes_json, with_spans))
+        got = parse_arrow(html, DEFAULT_OPTIONS, with_nodes_json, with_spans)
+        assert got.type == pa.struct(list(ARROW_SCHEMA))
+        assert got.to_pylist() == want.to_pylist()
+        adapted = table(parse_batch(pd.Series(html, dtype=object), DEFAULT_OPTIONS,
+                                    with_nodes_json, with_spans))
+        assert adapted.equals(want)
+
+    check()
+    # and the fixed cases in one batch, under each flag pair
+    for flags in [(True, True), (True, False), (False, True), (False, False)]:
+        want = table(_row_assembly(KERNEL_CASES, DEFAULT_OPTIONS, *flags))
+        got = parse_arrow(KERNEL_CASES, DEFAULT_OPTIONS, *flags)
+        assert got.to_pylist() == want.to_pylist()
+    errors = got.field("error").to_pylist()
+    assert errors[0] == "null html" and "Invalid UTF-8" in errors[2]
+    assert errors[3].startswith("Invalid code point") and errors[4].startswith("Tempeh")
+    assert [errors[i] for i in (1, 5, 6)] == [None] * 3
