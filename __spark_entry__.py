@@ -77,14 +77,12 @@ def entry(spark: SparkSession) -> DataFrame:
     from tempeh_spark.corpusops import hash_sample
     from tempeh_spark.dedup import dedup_decisions
     from tempeh_spark.featurize import text_embedding
+    from tempeh_spark.partitioning import url_buckets
     from tempeh_spark.textops import lang_id, quality_score, token_count
 
     docs = _docs(spark, "/root/testdata/sf0.001")
     pages = _docs_as_pages(docs)
-    buckets = max(8, 2 * spark.sparkContext.defaultParallelism)
-    parsed = parse_html(
-        pages.repartition(buckets, F.pmod(F.xxhash64("url", F.lit(17)), F.lit(buckets)))
-    )
+    parsed = parse_html(url_buckets(pages, max(8, 2 * spark.sparkContext.defaultParallelism)))
     extracted = parsed.select(
         "url",
         "doc_id",
@@ -1447,14 +1445,15 @@ def q_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream operator chain, as one composed value check."""
     from tempeh_spark import parse_html
     from tempeh_spark.corpusops import gopher_quality, pii_scrub
+    from tempeh_spark.partitioning import url_buckets
     from tempeh_spark.textops import fingerprint
 
     pages = _docs_as_pages(_docs(spark, sf_dir))
     # Two scale rules applied here (plan-asserted by
     # test_training_pipeline_parses_once):
-    # * spread the single-file parquet BEFORE the Arrow parse (url-hash
-    #   buckets, the same shape entry() uses) — one partition would run the
-    #   whole parse on one core;
+    # * spread the single-file parquet BEFORE the Arrow parse through
+    #   partitioning.url_buckets, the bucketing entry() and the extraction
+    #   job use — one partition would run the whole parse on one core;
     # * materialize the extracted text ONCE for the quality/dedup/scrub
     #   branches — the unmaterialized plan re-ran the parse SIX times.
     #   lazy localCheckpoint, not persist(): CacheManager entries from
@@ -1463,11 +1462,8 @@ def q_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     #   out of scope. Production at 10^12 rows does the same thing one
     #   level up: extraction lands as the table's text column
     #   (pipeline.py) and every downstream operator reads that column.
-    buckets = max(8, 2 * spark.sparkContext.defaultParallelism)
     text = (
-        parse_html(
-            pages.repartition(buckets, F.pmod(F.xxhash64("url", F.lit(17)), F.lit(buckets)))
-        )
+        parse_html(url_buckets(pages, max(8, 2 * spark.sparkContext.defaultParallelism)))
         .select("doc_id", F.col("parsed.main_text").alias("text"))
         .localCheckpoint(eager=False)
     )

@@ -182,8 +182,3 @@ def kmeans_fit(
             break
     return centroids, kmeans_assign(df, centroids, id_col, vec_col)
 
-
-def kmeans_objective(assigned: DataFrame) -> float:
-    """Sum of squared distances — the quantity Lloyd's monotonically
-    decreases (used by tests as the convergence property)."""
-    return float(assigned.agg(F.sum("dist2")).first()[0])

@@ -30,7 +30,7 @@ row-multiplying transform (``partitioning.spread_if_narrow``).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tempeh_spark.partitioning import ROW_MULTIPLYING, spread_if_narrow
@@ -81,21 +81,6 @@ def shingle_rows(
         F.explode(F.sequence(F.lit(1), F.length("t") - (ngram - 1))).alias("i"),
     )
     return pos.select("id", F.expr(f"substring(t, i, {ngram})").alias("g")).distinct()
-
-
-def char_shingles(
-    text_col: str = "text", ngram: int = 3, max_chars: int | None = None
-) -> Column:
-    """Array-valued shingles (interpreted HOF — convenient per-row form;
-    use shingle_rows for anything that scales with corpus size). Delegates
-    to textops.shingle_array, the single home of the descending-sequence
-    short-doc guard."""
-    from tempeh_spark.textops import shingle_array
-
-    norm = normalize_text(text_col)
-    if max_chars is not None:
-        norm = F.substring(norm, 1, max_chars)
-    return shingle_array(norm, ngram)
 
 
 def ngram_jaccard_pairs(

@@ -96,20 +96,6 @@ def cms_sketch(
     )
 
 
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Merge register tables by element-wise addition (the CMS merge law).
-
-    Union + one re-aggregation; exact BIGINT, so merged(parts) is
-    bit-equal to sketch(whole) — pinned by test.
-    """
-    if not sketches:
-        raise ValueError("need at least one sketch")
-    u = sketches[0]
-    for s in sketches[1:]:
-        u = u.unionByName(s)
-    return u.groupBy("row", "pos").agg(F.sum("total").alias("total"))
-
-
 def cms_estimate(
     sketch: DataFrame,
     probes: DataFrame,
@@ -145,22 +131,3 @@ def cms_estimate(
         .select(F.col("_it").alias(item_col), "est")
     )
 
-
-def cms_heavy_hitters(
-    df: DataFrame,
-    item_col: str,
-    threshold: int,
-    depth: int = 4,
-    width: int = 1024,
-) -> DataFrame:
-    """Items whose CMS estimate meets ``threshold`` — no false negatives
-    (estimates only overshoot), deterministic false-positive set.
-
-    The candidate list here is ``df``'s own distinct items, which is the
-    right call at gate/audit scale; at crawl scale feed a curated or
-    sampled candidate set through ``cms_estimate`` directly — the sketch
-    itself never needs the distinct shuffle, that is its whole point.
-    """
-    sk = cms_sketch(df, item_col, depth=depth, width=width)
-    est = cms_estimate(sk, df.select(item_col), item_col, depth=depth, width=width)
-    return est.where(F.col("est") >= F.lit(int(threshold)))

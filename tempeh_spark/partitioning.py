@@ -1,4 +1,5 @@
-"""The one input-spread helper for Python-heavy / row-multiplying operators.
+"""The input-spread helpers: ``spread_if_narrow`` for Python-heavy /
+row-multiplying operators, ``url_buckets`` for the HTML parse.
 
 Single-file parquet inputs arrive as ONE scan partition (CLAUDE.md gotcha),
 so a shingle explode, a mapInPandas DOM walk or an Arrow scoring pass
@@ -31,6 +32,10 @@ partition depend on what the caller does per row — one of two profiles:
   lsh_topk +27%, ann_recall +47% on 4 cores.
 
 When the plan has no file source (in-memory frames), the cap is used.
+
+``url_buckets`` is the parse's bucketing: the extraction job, the flagship
+``entry()`` and the training-pipeline query all hash pages by url into a
+fixed number of parse tasks through it.
 """
 
 from __future__ import annotations
@@ -48,6 +53,7 @@ class SpreadProfile(NamedTuple):
 
 ROW_MULTIPLYING = SpreadProfile(192 << 10, 8)
 PER_ROW = SpreadProfile(2 << 20, 2)
+SALT_MOD = 16  # sub-bucket salt for hot urls / giant hosts
 
 
 def _source_bytes(df: DataFrame) -> int:
@@ -77,3 +83,22 @@ def spread_if_narrow(df: DataFrame, key_col: str, profile: SpreadProfile) -> Dat
     if target <= cur:
         return df
     return df.repartition(target, F.col(key_col))
+
+
+def url_buckets(df: DataFrame, buckets: int) -> DataFrame:
+    """``df`` hash-repartitioned on its url into ``buckets`` tasks.
+
+    The key is ``xxhash64(url)``, plus a capture-time salt when the table
+    carries ``warc_ts``. Unique urls already spread under the hash; the salt
+    is for HOT KEYS: a url re-crawled 10^5 times would otherwise pin all its
+    captures to one task. Salting by (url, warc_ts) spreads a hot url over
+    up to ``SALT_MOD`` sub-buckets and stays deterministic per row, so the
+    url -> task mapping is lineage- and resume-safe.
+
+    The key goes to ``repartition`` as it is: ``repartition`` hashes it
+    again, so reducing it ``pmod buckets`` first would leave the ``buckets``
+    distinct values on only about 64% of the tasks (the rest empty)."""
+    key = F.xxhash64("url", F.lit(17))
+    if "warc_ts" in df.columns:
+        key = key + F.pmod(F.xxhash64("url", "warc_ts"), F.lit(SALT_MOD))
+    return df.repartition(buckets, key)

@@ -3,20 +3,22 @@
 Plan shape (see SURVEY.md §3 "Spark lifecycle"):
 
     scan(url, warc_ts, html, lang)           -- column-pruned at the source
-      -> repartition(buckets, xxhash64(url)) -- explicit url-hash bucketing
+      -> url_buckets(buckets)                -- explicit url-hash bucketing
       -> ArrowEvalPython[parse_html_udf]     -- the fused parse kernel
       -> project url, warc_ts, parse outputs, lineage
       -> sink (parquet dir or Iceberg table)
 
 Scale decisions, explicitly:
 
-* Bucketing by ``xxhash64(url)`` gives a uniform row distribution and a
-  deterministic url→task mapping (lineage). Document-size skew (38 KB page
-  vs 33 B stub in one bucket) is handled by making buckets numerous
-  (``buckets >= 4 * cores``) so task max-size variance stays small, plus
-  AQE advisory sizing for the shuffle. A single row is the minimum work
-  unit — no intra-document parallelism is needed because parse cost is
-  linear in bytes and documents are capped by ``max_html_bytes``.
+* Bucketing by url (``partitioning.url_buckets``: ``xxhash64(url)``, salted
+  by capture time, hashed straight into ``buckets`` tasks) gives a uniform
+  row distribution, fills every task, and keeps the url→task mapping
+  deterministic (lineage). Document-size skew (38 KB page vs 33 B stub in
+  one bucket) is handled by making buckets numerous (``buckets >= 4 *
+  cores``) so task max-size variance stays small. A single row is the
+  minimum work unit — no intra-document parallelism is needed because
+  parse cost is linear in bytes and documents are capped by
+  ``max_html_bytes``.
 * ``max_html_bytes`` guards executor memory: oversized documents become
   error rows instead of OOM-killing a 1000-executor stage.
 * Resume is a checkpoint **anti-join**: re-running the job with the same
@@ -45,10 +47,10 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from tempeh_spark.options import DEFAULT_OPTIONS, ParserOptions
+from tempeh_spark.partitioning import url_buckets
 from tempeh_spark.udf import NULL_HTML_ERROR, make_parse_udf
 
 INPUT_COLS = ("url", "warc_ts", "html", "lang")
-SALT_MOD = 16  # sub-bucket salt for hot urls / giant hosts
 OVERSIZE_ERROR = "oversize document skipped"
 ERROR_CLASSES = ("oversize", "null_html", "decode", "invalid_code_point", "tree")
 TOTALS = ("rows", "bytes", "errors")  # the cumulative numbers a run returns
@@ -93,16 +95,7 @@ def extract_pages(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> Data
         (F.length("html") > cfg.max_html_bytes).alias("oversize"),
     )
 
-    # Explicit bucketing: xxhash64(url), plus a capture-time salt when the
-    # table carries warc_ts. Unique urls already spread under the hash; the
-    # salt is for HOT KEYS — a url re-crawled 10^5 times would otherwise
-    # pin all its captures to one task. Salting by (url, warc_ts) spreads a
-    # hot url across up to SALT_MOD sub-buckets while staying fully
-    # deterministic per row (resume/lineage safe).
-    key = F.xxhash64("url", F.lit(17))
-    if "warc_ts" in df.columns:
-        key = key + F.pmod(F.xxhash64("url", "warc_ts"), F.lit(SALT_MOD))
-    bucketed = guarded.repartition(buckets, F.pmod(key, F.lit(buckets)))
+    bucketed = url_buckets(guarded, buckets)
 
     # thread the output flags into the KERNEL: dropping nodes_json/spans at
     # the projection would still pay their serialization CPU per batch

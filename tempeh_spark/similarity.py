@@ -34,18 +34,14 @@ from tempeh_spark.vecmath import (
     band_buckets_udf,
     blocked_pairs,
     bucket_pair_kernel,
+    cosine,
     masked_cosine_udf,
 )
-from tempeh_spark.vecmath import cosine as _batch_cosine
 
 
 def _dot(x: Column, y: Column) -> Column:
     """Interpreted-HOF dot product — reference form only (see vecmath)."""
     return F.aggregate(F.zip_with(x, y, lambda a, b: a * b), F.lit(0.0), lambda acc, v: acc + v)
-
-
-def cosine(x: Column, y: Column) -> Column:
-    return _batch_cosine(x, y)
 
 
 def brute_topk(

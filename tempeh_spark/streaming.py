@@ -1,7 +1,7 @@
 """Structured Streaming ingestion for the extraction pipeline.
 
-The parse kernel is stateless per row, so streaming is the same UDF over a
-``readStream`` source — no stateful operators needed (SURVEY.md §2 Part B).
+The parse kernel is stateless per row, so streaming is the batch job's
+``extract_pages`` over a ``readStream`` source (SURVEY.md §2 Part B).
 The watermark + dedup shown here handle the one stream-specific concern:
 re-crawled urls arriving late.
 """
@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from tempeh_spark.corpus import PAGES_SCHEMA
 from tempeh_spark.options import DEFAULT_OPTIONS, ParserOptions
-from tempeh_spark.udf import make_parse_udf
+from tempeh_spark.pipeline import PipelineConfig, extract_pages
 
 
 def stream_pages(
@@ -21,43 +21,33 @@ def stream_pages(
     source_dir: str,
     watermark: str = "10 minutes",
     options: ParserOptions = DEFAULT_OPTIONS,
-    dedup_urls: bool = True,
 ) -> DataFrame:
     """File-source stream of pages parquet -> parsed rows.
 
     * watermark on ``warc_ts`` bounds state for the url dedup;
     * ``dropDuplicates(url, warc_ts)`` keeps one parse per capture;
-    * the parse UDF itself is the same batch kernel (stateless).
+    * the parse is the batch job's ``extract_pages`` (stateless): the same
+      url bucketing and the same ``max_html_bytes`` guard.
     """
     src = (
         spark.readStream.schema(PAGES_SCHEMA)
         .option("maxFilesPerTrigger", 8)
         .parquet(source_dir)
+        .withWatermark("warc_ts", watermark)
+        .dropDuplicates(["url", "warc_ts"])
     )
-    src = src.withWatermark("warc_ts", watermark)
-    if dedup_urls:
-        src = src.dropDuplicates(["url", "warc_ts"])
-    parsed = src.withColumn("parsed", make_parse_udf(options)(F.col("html")))
-    return parsed.select(
-        "url",
-        "warc_ts",
-        F.col("parsed.text").alias("text"),
-        F.col("parsed.main_text").alias("main_text"),
-        F.col("parsed.error").alias("error"),
-        F.col("parsed.n_nodes").alias("n_nodes"),
+    cfg = PipelineConfig(options=options, with_nodes_json=False, with_spans=False)
+    return extract_pages(src, cfg).select(
+        "url", "warc_ts", "text", "main_text", "error", "n_nodes"
     )
 
 
-def _stream_file_source(
-    spark: SparkSession, path: str, schema, max_files_per_trigger: int | None = None
-) -> DataFrame:
+def _stream_file_source(spark: SparkSession, path: str, schema) -> DataFrame:
     """readStream over a parquet path. File-stream sources list a DIRECTORY;
     a single-file table becomes its parent dir filtered to that file name."""
     import os
 
     reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     if os.path.isfile(path):
         # the basename is used as a GLOB: escape metacharacters or a file
         # named events[1].parquet silently matches nothing. Backslash-escape
@@ -136,102 +126,6 @@ def stream_hourly_events(
         "event_type",
         F.col("n").cast("long").alias("n"),
         "avg_value",
-    )
-
-
-def stream_sessionize(
-    spark: SparkSession,
-    events_path: str,
-    gap_minutes: int = 30,
-    max_files_per_trigger: int = 1,
-) -> DataFrame:
-    """Custom STATEFUL streaming operator via ``applyInPandasWithState``:
-    per-user session counting with a ``gap_minutes`` inactivity rule.
-
-    State per user = the MERGED SESSION INTERVALS seen so far (start/end
-    epoch arrays) plus the event count. Each micro-batch folds its events
-    in as point intervals and re-merges under the gap rule, so the final
-    answer equals the batch window-function sessionizer for ARBITRARY batch
-    boundaries AND arbitrary event-time arrival order — a later trigger
-    delivering older events correctly bridges (merges) two previously
-    separate sessions. (A scalar last-epoch state can't do that: out-of-
-    order arrival would undercount or miscount sessions; FileStreamSource
-    orders files by mtime, not event time.) State size is O(open sessions
-    per user), bounded in production by evicting intervals older than the
-    watermark. ``availableNow`` drains the backlog; the final row per user
-    is the one with the highest n_events (n_sessions itself is NOT
-    monotonic — a bridging event can merge two intervals).
-    """
-    import uuid
-
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        ArrayType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("n_sessions", LongType()),
-            StructField("n_events", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("starts", ArrayType(LongType())),
-            StructField("ends", ArrayType(LongType())),
-            StructField("n_events", LongType()),
-        ]
-    )
-    gap_s = gap_minutes * 60
-
-    def fold(key, pdfs, state: GroupState):
-        new_eps: list[int] = []
-        for pdf in pdfs:
-            new_eps.extend(int(e) for e in pdf["epoch"])
-        if state.exists:
-            starts, ends, n_events = state.get
-            intervals = [[int(s), int(e)] for s, e in zip(starts, ends)]
-        else:
-            intervals, n_events = [], 0
-        intervals.extend([e, e] for e in new_eps)
-        intervals.sort()
-        merged: list[list[int]] = []
-        for s, e in intervals:
-            if merged and s - merged[-1][1] <= gap_s:
-                merged[-1][1] = max(merged[-1][1], e)
-            else:
-                merged.append([s, e])
-        n_events += len(new_eps)
-        state.update(
-            ([m[0] for m in merged], [m[1] for m in merged], n_events)
-        )
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_sessions": [len(merged)], "n_events": [n_events]}
-        )
-
-    schema = spark.read.parquet(events_path).schema
-    src = _stream_file_source(spark, events_path, schema, max_files_per_trigger)
-    keyed = src.select(
-        "user_id",
-        "event_id",
-        F.unix_timestamp(F.col("ts").cast("timestamp")).alias("epoch"),
-    ).groupBy("user_id")
-    updates = keyed.applyInPandasWithState(
-        fold, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-    out = _drain_to_df(updates, "update", f"stream_sessions_{uuid.uuid4().hex[:8]}")
-    # n_events is monotonic per user, so max_by(n_sessions, n_events) picks
-    # each user's LAST emission (n_sessions alone is not monotonic: an
-    # out-of-order bridging event merges two intervals and lowers it)
-    return out.groupBy("user_id").agg(
-        F.max_by("n_sessions", "n_events").cast("long").alias("n_sessions"),
-        F.max("n_events").cast("long").alias("n_events"),
     )
 
 

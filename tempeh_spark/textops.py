@@ -13,7 +13,7 @@ column: no shuffle, no UDF, fully pushdown-friendly.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # stopword regexes per language (tiny, deterministic language-ID heuristic)
@@ -122,9 +122,7 @@ def shingle_array(norm: Column, ngram: int) -> Column:
 
     The single home of the short-doc guard: Spark sequence(1, end<1) runs
     DESCENDING and would fabricate a partial-text shingle no SQL engine
-    emits — short docs get an EMPTY array. dedup.char_shingles and
-    bottomk_shingle_sketch both delegate here so the guard can never
-    diverge between them."""
+    emits — short docs get an EMPTY array."""
     grams = F.array_distinct(
         F.transform(
             F.sequence(F.lit(1), F.length(norm) - (ngram - 1)),
@@ -145,16 +143,3 @@ def bottomk_shingle_sketch(col: Column | str = "text", k: int = 8, ngram: int = 
     hashes = F.array_sort(F.transform(grams, lambda g: F.md5(F.encode(g, "UTF-8"))))
     return F.array_join(F.slice(hashes, 1, k), "")
 
-
-def add_text_analysis(df: DataFrame, col: str = "text") -> DataFrame:
-    """Convenience: append the whole text-analysis column family."""
-    feats = quality_features(col)
-    out = df
-    for name, expr in feats.items():
-        out = out.withColumn(name, expr)
-    return (
-        out.withColumn("n_tokens_regex", regex_token_count(col))
-        .withColumn("lang_id", lang_id(col))
-        .withColumn("quality", quality_score(col))
-        .withColumn("fingerprint", fingerprint(col))
-    )

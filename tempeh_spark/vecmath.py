@@ -226,7 +226,10 @@ def _pair_block(
     )
 
 
-def bucket_pair_kernel(threshold: float, small_max: int = 64):
+SMALL_SEGMENT_MAX = 64  # bucket_pair_kernel: largest segment paired by diagonals
+
+
+def bucket_pair_kernel(threshold: float):
     """mapInPandas kernel: all-pairs cosine WITHIN each (band, bucket)
     segment of a partition that has been hash-repartitioned on those keys,
     emitting only (id_a < id_b) pairs at cosine >= threshold - 1e-4 (the
@@ -240,10 +243,10 @@ def bucket_pair_kernel(threshold: float, small_max: int = 64):
     hundreds of thousands of 1-5-row groups, where groupBy().applyInPandas
     pays per-group overhead that measured SLOWER than the join it replaced
     (pipeline_decisions 31 s -> 37 s at sf1.0). Here segments are found
-    with one lexsort; segments <= ``small_max`` rows enumerate their pairs
-    as (i, i+d) diagonals — at most small_max-1 vectorized passes over ALL
-    small segments at once — and bigger segments fall through to the
-    tiled ``_pair_block``."""
+    with one lexsort; segments <= ``SMALL_SEGMENT_MAX`` rows enumerate their
+    pairs as (i, i+d) diagonals — at most SMALL_SEGMENT_MAX-1 vectorized
+    passes over ALL small segments at once — and bigger segments fall
+    through to the tiled ``_pair_block``."""
     cutoff = threshold - 1e-4
 
     def _k(batches) -> "pd.DataFrame":
@@ -273,7 +276,7 @@ def bucket_pair_kernel(threshold: float, small_max: int = 64):
         # small segments: all at once, one vectorized pass per diagonal d
         pos = np.arange(n) - np.repeat(starts[:-1], sizes)  # offset in segment
         seg_sz = np.repeat(sizes, sizes)
-        small = seg_sz <= small_max
+        small = seg_sz <= SMALL_SEGMENT_MAX
         sa_all = np.sqrt(_seq_dot(X, X))
         max_small = int(seg_sz[small].max()) if small.any() else 0
         for d in range(1, max_small):
@@ -296,7 +299,7 @@ def bucket_pair_kernel(threshold: float, small_max: int = 64):
                     )
                 )
         # big segments: tiled all-pairs each
-        for k in np.flatnonzero(sizes > small_max):
+        for k in np.flatnonzero(sizes > SMALL_SEGMENT_MAX):
             s, e = starts[k], starts[k + 1]
             out.append(_pair_block(X[s:e], ids[s:e], X[s:e], ids[s:e], cutoff))
         yield pd.concat(

@@ -17,8 +17,6 @@ turns the per-anchor rows into that graph with pure DataFrame ops:
   count + distinct-source-document count per edge. At 10^12 documents this
   is the map-side-combinable shuffle on the edge key; host cardinality is
   millions, not trillions, so everything downstream of this agg is small.
-* ``host_degrees`` — out/in degree + link volume per host (two aggs over
-  the already-small edge list, full-outer-joined).
 * ``pagerank_units`` — fixed-iteration PageRank in EXACT scaled-integer
   arithmetic: ranks are BIGINT units of 1/SCALE, every step is integer
   division (``div``) and integer multiply — no float summation order, no
@@ -117,24 +115,6 @@ def host_edges(
             F.count(F.lit(1)).alias("n_links"),
             F.count_distinct("doc_id").alias("n_docs"),
         )
-    )
-
-
-def host_degrees(edges: DataFrame) -> DataFrame:
-    """Per-host degree/volume summary over the (already small) edge list:
-    (host, out_degree, in_degree, n_out_links, n_in_links); self-edges
-    count toward both sides."""
-    out = edges.groupBy(F.col("src_host").alias("host")).agg(
-        F.count(F.lit(1)).alias("out_degree"),
-        F.sum("n_links").alias("n_out_links"),
-    )
-    inn = edges.groupBy(F.col("dst_host").alias("host")).agg(
-        F.count(F.lit(1)).alias("in_degree"),
-        F.sum("n_links").alias("n_in_links"),
-    )
-    return (
-        out.join(inn, "host", "full_outer")
-        .na.fill(0, ["out_degree", "in_degree", "n_out_links", "n_in_links"])
     )
 
 

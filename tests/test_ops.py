@@ -58,9 +58,18 @@ def test_simhash_consistency(spark, docs):
 
 
 def test_lang_and_quality(spark, docs):
-    from tempeh_spark.textops import add_text_analysis
+    from tempeh_spark.textops import fingerprint, lang_id, quality_score, token_count
 
-    rows = {r["doc_id"]: r for r in add_text_analysis(docs).collect()}
+    rows = {
+        r["doc_id"]: r
+        for r in docs.select(
+            "doc_id",
+            lang_id("text").alias("lang_id"),
+            quality_score("text").alias("quality"),
+            token_count("text").alias("n_tokens"),
+            fingerprint("text").alias("fingerprint"),
+        ).collect()
+    }
     assert rows[1]["lang_id"] == "en"
     assert rows[5]["lang_id"] == "de"
     assert rows[6]["lang_id"] == "und"
@@ -403,14 +412,14 @@ def test_kmeans_fit_and_assign(spark):
     cells compose with the IVF searcher."""
     import numpy as np
 
-    from tempeh_spark.clustering import kmeans_assign, kmeans_fit, kmeans_objective
+    from tempeh_spark.clustering import kmeans_assign, kmeans_fit
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     # objective monotonicity across increasing iteration budgets
     objs = []
     for iters in (1, 3, 8):
         _, assigned = kmeans_fit(emb, k=4, max_iter=iters)
-        objs.append(kmeans_objective(assigned))
+        objs.append(float(assigned.agg(F.sum("dist2")).first()[0]))
     assert objs[0] >= objs[1] >= objs[2]
 
     cents, assigned = kmeans_fit(emb, k=4, max_iter=8)
@@ -429,8 +438,6 @@ def test_kmeans_fit_and_assign(spark):
     assert cents == cents2
 
     # composition: trained cells feed the IVF searcher
-    from pyspark.sql import functions as F
-
     from tempeh_spark.similarity import ivf_topk
 
     labeled = emb.drop("label").join(

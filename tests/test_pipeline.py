@@ -168,6 +168,19 @@ def test_hot_url_salting_spreads_tasks(spark):
     assert a == b
 
 
+def test_url_buckets_fill_every_task(spark):
+    """B buckets over 8*B distinct urls give B non-empty parse tasks: the
+    hashed url key goes to repartition as it is (a key reduced mod B
+    first lands on only about 20 of 32 tasks)."""
+    from tempeh_spark.partitioning import url_buckets
+
+    pages = spark.range(256).select(
+        F.concat(F.lit("https://site"), F.col("id").cast("string"), F.lit(".example/")).alias("url")
+    )
+    filled = url_buckets(pages, 32).select(F.spark_partition_id()).distinct().count()
+    assert filled == 32
+
+
 def _log(spark, out_dir):
     return spark.read.parquet(out_dir.rstrip("/") + "_metrics").orderBy("finished_at").collect()
 

@@ -26,6 +26,37 @@ def test_stream_pages_availablenow(spark, tmp_path):
     assert spark.read.parquet(out).count() == 32
 
 
+def test_stream_pages_oversize_guard(spark, tmp_path):
+    """The stream parses through the batch job's extract_pages, so a page
+    over max_html_bytes comes out as one error row, never reaching the
+    parse kernel."""
+    from pyspark.sql import functions as F
+
+    from tempeh_spark.pipeline import OVERSIZE_ERROR
+    from tempeh_spark.streaming import run_stream_to_parquet
+
+    src = str(tmp_path / "stream_src")
+    out = str(tmp_path / "stream_out")
+    # built per row (a literal would ship 64 MiB in every task binary)
+    big = F.encode(F.repeat(F.lit("a"), F.col("id") + (64 << 20) + 1), "UTF-8")
+    spark.range(2).select(
+        F.concat(F.lit("https://big.example/"), F.col("id").cast("string")).alias("url"),
+        F.lit("2024-01-01 00:00:00").cast("timestamp").alias("warc_ts"),
+        F.when(F.col("id") == 0, big).otherwise(F.encode(F.lit("<p>hi</p>"), "UTF-8")).alias("html"),
+        F.lit(None).cast("string").alias("text"),
+        F.lit("en").alias("lang"),
+    ).write.parquet(src)
+
+    q = run_stream_to_parquet(spark, src, out, str(tmp_path / "ckpt"))
+    q.awaitTermination(120)
+
+    rows = {r["url"]: r for r in spark.read.parquet(out).collect()}
+    assert len(rows) == 2
+    assert rows["https://big.example/0"]["error"] == OVERSIZE_ERROR
+    assert rows["https://big.example/1"]["error"] is None
+    assert rows["https://big.example/1"]["text"] == "hi"
+
+
 def test_stream_hourly_equals_batch(spark, tmp_path):
     """availableNow drains the backlog: the finished windowed-agg stream
     must equal the batch hourly rollup."""
@@ -52,114 +83,6 @@ def test_stream_hourly_equals_batch(spark, tmp_path):
     assert out[("2024-01-01 10:00:00", "click")] == (2, 2.0)
     assert out[("2024-01-01 11:00:00", "view")] == (1, 5.0)
     assert out[("2024-01-01 11:00:00", "click")] == (1, 7.0)
-
-
-def test_stateful_stream_sessionize_matches_batch(spark, tmp_path):
-    """applyInPandasWithState: per-user session state carried ACROSS
-    micro-batches (one file per trigger) must reproduce the batch
-    window-function sessionization."""
-    import os
-    import time
-
-    from pyspark.sql import functions as F
-
-    from tempeh_spark.streaming import stream_sessionize
-
-    def mk(rows):
-        return spark.createDataFrame(
-            rows, "event_id long, user_id long, event_type string, ts_s string, value double"
-        ).select(
-            "event_id", "user_id", "event_type",
-            F.col("ts_s").cast("timestamp").alias("ts"), "value",
-        )
-
-    src = str(tmp_path / "sessions_src")
-    # batch 1: u1 two events 10 min apart (one session); u2 one event
-    mk([
-        (1, 1, "c", "2024-01-01 10:00:00", 0.0),
-        (2, 1, "c", "2024-01-01 10:10:00", 0.0),
-        (3, 2, "c", "2024-01-01 10:00:00", 0.0),
-    ]).coalesce(1).write.mode("append").parquet(src)
-    time.sleep(1.1)
-    # batch 2 (newer mtime -> second trigger): u1 crosses the 30-min gap
-    # (new session); u2 continues the same session
-    mk([
-        (4, 1, "c", "2024-01-01 11:00:00", 0.0),
-        (5, 2, "c", "2024-01-01 10:20:00", 0.0),
-    ]).coalesce(1).write.mode("append").parquet(src)
-
-    out = {r["user_id"]: (r["n_sessions"], r["n_events"])
-           for r in stream_sessionize(spark, src, gap_minutes=30).collect()}
-    assert out[1] == (2, 3)  # state crossed the batch boundary
-    assert out[2] == (1, 2)
-
-    # and it equals the batch sessionizer on the same data
-    from pyspark.sql.window import Window
-
-    e = spark.read.parquet(src)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    batch = {
-        r["user_id"]: (r["n_sessions"], r["n_events"])
-        for r in e.withColumn("new_s", F.when(gap.isNull() | (gap > 1800), 1).otherwise(0))
-        .groupBy("user_id")
-        .agg(F.sum("new_s").alias("n_sessions"), F.count("*").alias("n_events"))
-        .collect()
-    }
-    assert out == batch
-
-
-def test_stateful_sessionize_out_of_order_batches(spark, tmp_path):
-    """A later trigger delivering OLDER events must bridge two previously
-    separate sessions (interval-merge state): stream == batch sessionizer
-    even when file arrival order disagrees with event time."""
-    import time
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from tempeh_spark.streaming import stream_sessionize
-
-    def mk(rows):
-        return spark.createDataFrame(
-            rows, "event_id long, user_id long, event_type string, ts_s string, value double"
-        ).select(
-            "event_id", "user_id", "event_type",
-            F.col("ts_s").cast("timestamp").alias("ts"), "value",
-        )
-
-    src = str(tmp_path / "ooo_src")
-    # batch 1 (older mtime, NEWER events): u1 at 10:00 and 11:00 — two
-    # sessions under a 30-min gap... until batch 2 bridges them
-    mk([
-        (1, 1, "c", "2024-01-01 10:00:00", 0.0),
-        (2, 1, "c", "2024-01-01 11:00:00", 0.0),
-        (3, 2, "c", "2024-01-01 09:00:00", 0.0),
-    ]).coalesce(1).write.mode("append").parquet(src)
-    time.sleep(1.1)
-    # batch 2 (newer mtime, OLDER event): u1 at 10:30 bridges the gap ->
-    # ONE session; u2 gets a genuinely new later session
-    mk([
-        (4, 1, "c", "2024-01-01 10:30:00", 0.0),
-        (5, 2, "c", "2024-01-01 12:00:00", 0.0),
-    ]).coalesce(1).write.mode("append").parquet(src)
-
-    out = {r["user_id"]: (r["n_sessions"], r["n_events"])
-           for r in stream_sessionize(spark, src, gap_minutes=30).collect()}
-    assert out[1] == (1, 3)  # bridged: n_sessions DECREASED across batches
-    assert out[2] == (2, 2)
-
-    e = spark.read.parquet(src)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    batch = {
-        r["user_id"]: (r["n_sessions"], r["n_events"])
-        for r in e.withColumn("new_s", F.when(gap.isNull() | (gap > 1800), 1).otherwise(0))
-        .groupBy("user_id")
-        .agg(F.sum("new_s").alias("n_sessions"), F.count("*").alias("n_events"))
-        .collect()
-    }
-    assert out == batch
 
 
 def test_stream_file_source_metachar_filename(spark, tmp_path):

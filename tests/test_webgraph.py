@@ -1,4 +1,4 @@
-"""Webgraph aggregation (webgraph.py): href->host resolution, edge/degree
+"""Webgraph aggregation (webgraph.py): href->host resolution, edge
 aggregation, exact-integer PageRank invariants."""
 
 from __future__ import annotations
@@ -6,7 +6,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tempeh_spark.webgraph import (
-    host_degrees,
     host_edges,
     pagerank_units,
     target_host,
@@ -75,11 +74,6 @@ def test_url_host_and_edges_and_degrees(spark):
     assert edges[("a.com", "b.com")].n_links == 3
     assert edges[("a.com", "b.com")].n_docs == 2
     assert edges[("a.com", "a.com")].n_links == 1
-
-    deg = {r.host: r for r in host_degrees(host_edges(links)).collect()}
-    assert deg["a.com"].out_degree == 2 and deg["a.com"].n_out_links == 4
-    assert deg["b.com"].out_degree == 0 and deg["b.com"].in_degree == 1
-    assert deg["b.com"].n_in_links == 3
 
 
 def test_anchor_stats_topk_terms_per_target(spark):
