@@ -38,6 +38,25 @@ WS_SQL = r" \t\n\f\r"
 NORM_SQL = "trim(regexp_replace(lower({c}), '[" + WS_SQL + "]+', ' ', 'g'))"
 
 
+def _char_ngrams_sql(t: str, n: int) -> str:
+    """The character ``n``-grams of string ``t`` as a list, one per start
+    position, repeats kept: twin of ``textops.char_ngrams``
+    (``generate_series`` is empty for texts shorter than ``n``)."""
+    return (
+        f"list_transform(generate_series(1, greatest(len({t}) - {n - 1}, 0)), "
+        f"i -> substring({t}, i, {n}))"
+    )
+
+
+def _word_ngrams_sql(ws: str, n: int) -> str:
+    """The word ``n``-grams of list ``ws`` as a list, each joined by one
+    space: twin of ``textops.word_ngrams``."""
+    return (
+        f"list_transform(generate_series(1, greatest(len({ws}) - {n - 1}, 0)), "
+        f"i -> array_to_string({ws}[i:i+{n - 1}], ' '))"
+    )
+
+
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
@@ -285,9 +304,9 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tempeh_spark.dedup import simhash16_table
+    from tempeh_spark.dedup import simhash_table
 
-    return simhash16_table(_docs(spark, sf_dir)).select(
+    return simhash_table(_docs(spark, sf_dir), bits=16).select(
         F.col("id").cast("long").alias("doc_id"),
         F.col("simhash").cast("long").alias("simhash"),
     )
@@ -774,19 +793,13 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_decontaminate() -> str:
-    return r"""
+    return rf"""
 WITH w AS (
   SELECT doc_id,
          list_filter(string_split_regex(lower(text), '[ \t\n\f\r]+'), x -> x <> '') AS ws
   FROM documents
 ),
-sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           generate_series(1, greatest(len(ws) - 7, 0)),
-           i -> array_to_string(ws[i:i+7], ' '))) AS gs
-  FROM w
-),
+sh AS (SELECT doc_id, list_distinct({_word_ngrams_sql('ws', 8)}) AS gs FROM w),
 cs AS (SELECT doc_id, unnest(gs) AS g FROM sh),
 bs AS (SELECT DISTINCT unnest(gs) AS g FROM sh WHERE doc_id % 29 = 0),
 hits AS (SELECT doc_id, count(*) AS n FROM cs JOIN bs USING (g) GROUP BY 1)
@@ -883,17 +896,12 @@ def q_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_repetition_signals() -> str:
-    return r"""
+    return rf"""
 WITH w AS (
   SELECT doc_id, list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> x <> '') AS ws
   FROM documents
 ),
-bi AS (
-  SELECT doc_id, unnest(list_transform(
-           generate_series(1, greatest(len(ws) - 1, 0)),
-           i -> ws[i] || ' ' || ws[i + 1])) AS bg
-  FROM w
-),
+bi AS (SELECT doc_id, unnest({_word_ngrams_sql('ws', 2)}) AS bg FROM w),
 bc AS (SELECT doc_id, bg, count(*) AS c FROM bi GROUP BY 1, 2),
 ba AS (SELECT doc_id, max(c) AS top_bg, sum(c) AS n_bg FROM bc GROUP BY 1),
 u AS (SELECT doc_id, unnest(ws) AS w FROM w),
@@ -2355,27 +2363,16 @@ def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     (source, register) agg, bounded at 256 rows per source per mapper."""
     from tempeh_spark.corpusops import hll_distinct
     from tempeh_spark.partitioning import ROW_MULTIPLYING, spread_if_narrow
-    from tempeh_spark.textops import normalize_text
+    from tempeh_spark.textops import char_ngrams
 
     docs = _docs(spark, sf_dir)
     # spread BEFORE the ~300x gram explode: the single-footer scan would
     # otherwise run both shingle legs' explode + partial aggs on one core
     # (measured 14.6 s at sf1.0; the aggs themselves are bounded)
-    base = spread_if_narrow(docs, "doc_id", ROW_MULTIPLYING).select(
-        "source", normalize_text("text").alias("t")
-    )
-    grams = (
-        base.where(F.length("t") >= 4)
-        .select(
-            "source",
-            "t",
-            F.explode(F.sequence(F.lit(1), F.length("t") - 3)).alias("i"),
-        )
-        .select("source", F.expr("substring(t, i, 4)").alias("g"))
-        # both the sketch leg and the exact leg consume the gram rows:
-        # materialize the explode once (lazy, ContextCleaner-released)
-        .localCheckpoint(eager=False)
-    )
+    base = spread_if_narrow(docs, "doc_id", ROW_MULTIPLYING)
+    # both the sketch leg and the exact leg consume the gram rows:
+    # materialize the explode once (lazy, ContextCleaner-released)
+    grams = char_ngrams(base, ["source"], "text", 4).localCheckpoint(eager=False)
     sh_h = hll_distinct(grams, "g", ("source",), p=8, w=20).withColumnRenamed(
         "hll_distinct", "hll_shingles"
     )
@@ -2433,9 +2430,7 @@ def _oracle_hll_distinct() -> str:
 
     return f"""
 WITH sh_items AS (
-  SELECT source,
-         unnest(list_transform(generate_series(1, greatest(len(t) - 3, 0)),
-                               i -> substring(t, i, 4))) AS g
+  SELECT source, unnest({_char_ngrams_sql('t', 4)}) AS g
   FROM (SELECT source, {NORM_SQL.format(c='text')} AS t FROM documents)
 ),
 lg_items AS (SELECT source, lang AS g FROM documents),
@@ -2683,10 +2678,7 @@ def _oracle_corpus_rollup() -> str:
 
 _SHINGLES_CTE = f"""
 shingled AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           generate_series(1, greatest(len(t) - 7, 0)),
-           i -> substring(t, i, 8))) AS sh
+  SELECT doc_id, list_distinct({_char_ngrams_sql('t', 8)}) AS sh
   FROM (SELECT doc_id, substring({NORM_SQL.format(c='text')}, 1, 300) AS t
         FROM documents)
 )
@@ -2929,9 +2921,7 @@ def _oracle_bottomk_sketch() -> str:
     return f"""
 SELECT doc_id::BIGINT AS doc_id,
        coalesce(array_to_string(list_sort(list_transform(
-         list_distinct(list_transform(
-           generate_series(1, greatest(len(t) - 3, 0)), i -> substring(t, i, 4))),
-         g -> md5(g)))[1:8], ''), '') AS sketch
+         list_distinct({_char_ngrams_sql('t', 4)}), g -> md5(g)))[1:8], ''), '') AS sketch
 FROM (SELECT doc_id, {NORM_SQL.format(c='text')} AS t FROM documents)
 """
 
@@ -2957,12 +2947,7 @@ def _text_emb_ctes(dim: int = 64, ngram: int = 3) -> str:
     zeros = ", ".join("0.0" for _ in range(dim))
     return f"""
 tn AS (SELECT doc_id, {NORM_SQL.format(c='text')} AS t FROM documents),
-tg AS (
-  SELECT doc_id,
-         unnest(list_transform(generate_series(1, greatest(len(t) - {ngram - 1}, 0)),
-                               i -> substring(t, i, {ngram}))) AS g
-  FROM tn
-),
+tg AS (SELECT doc_id, unnest({_char_ngrams_sql('t', ngram)}) AS g FROM tn),
 tbk AS (SELECT doc_id, (('0x' || substr(md5(g), 1, 8))::BIGINT % {dim}) AS b FROM tg),
 twd AS (SELECT doc_id, {c_cols} FROM tbk GROUP BY doc_id),
 tvc AS (SELECT doc_id, [{comps}] AS v
@@ -3602,19 +3587,13 @@ FROM h
 """,
         # same distinct word-8-gram substrate as the decontaminate twin;
         # integer-only counts so the compare is bit-exact
-        "duplicate_spans": r"""
+        "duplicate_spans": rf"""
 WITH w AS (
   SELECT doc_id,
          list_filter(string_split_regex(lower(text), '[ \t\n\f\r]+'), x -> x <> '') AS ws
   FROM documents
 ),
-sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           generate_series(1, greatest(len(ws) - 7, 0)),
-           i -> array_to_string(ws[i:i+7], ' '))) AS gs
-  FROM w
-),
+sh AS (SELECT doc_id, list_distinct({_word_ngrams_sql('ws', 8)}) AS gs FROM w),
 cs AS (SELECT doc_id, unnest(gs) AS g FROM sh),
 dup AS (SELECT g FROM (SELECT g, count(*) AS df FROM cs GROUP BY 1) WHERE df >= 2),
 per_doc AS (SELECT doc_id, count(*) AS n_spans FROM cs GROUP BY 1),

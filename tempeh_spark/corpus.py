@@ -9,7 +9,6 @@ replication indices, not RNG, drive the variation.
 from __future__ import annotations
 
 import datetime
-import itertools
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession

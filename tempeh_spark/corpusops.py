@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from tempeh_spark.textops import WS
+from tempeh_spark.textops import WS, word_ngrams
 
 
 def _words(text_col: str, lower: bool = False):
@@ -208,17 +208,10 @@ def word_shingle_rows(
     ngram: int = 8,
 ) -> DataFrame:
     """Distinct word n-grams as (id, g) rows — the decontamination
-    substrate. Words split on whitespace, lowercased; docs shorter than
-    ``ngram`` words yield no shingles (explicit filter — Spark sequences
-    run DESCENDING when end < start, which would fabricate rows)."""
+    substrate: ``textops.word_ngrams`` over the lowercased whitespace
+    words, plus ``distinct``."""
     words = _words(text_col, lower=True)
-    base = df.select(F.col(id_col).alias("id"), words.alias("ws"))
-    pos = base.where(F.size("ws") >= ngram).select(
-        "id", "ws", F.explode(F.sequence(F.lit(1), F.size("ws") - (ngram - 1))).alias("i")
-    )
-    return pos.select(
-        "id", F.array_join(F.slice("ws", F.col("i"), ngram), " ").alias("g")
-    ).distinct()
+    return word_ngrams(df, [F.col(id_col).alias("id")], words, ngram).distinct()
 
 
 def decontaminate(
@@ -293,19 +286,8 @@ def repetition_signals(
     words = _words(text_col)
     base = df.select(F.col(id_col).alias("doc_id"), words.alias("ws"))
     bi = (
-        base.where(F.size("ws") >= 2)
-        .select(
-            "doc_id",
-            F.explode(F.sequence(F.lit(1), F.size("ws") - 1)).alias("i"),
-            "ws",
-        )
-        .select(
-            "doc_id",
-            F.concat_ws(
-                " ", F.element_at("ws", F.col("i")), F.element_at("ws", F.col("i") + 1)
-            ).alias("bg"),
-        )
-        .groupBy("doc_id", "bg")
+        word_ngrams(base, ["doc_id"], "ws", 2)
+        .groupBy("doc_id", "g")
         .agg(F.count("*").alias("c"))
         .groupBy("doc_id")
         .agg(F.max("c").alias("top_bg"), F.sum("c").alias("n_bg"))

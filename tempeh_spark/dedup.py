@@ -6,10 +6,10 @@ Scale notes (the whole point of these being Spark-first):
 * **exact_dedup** — one hash-groupBy shuffle on ``md5(normalized text)``;
   map-side partial aggregation makes the shuffle carry one row per distinct
   digest per partition, not per document.
-* **shingle_rows** — the shared substrate: character n-grams as *exploded
-  rows* (``explode(sequence(...))`` + ``substring``), never as interpreted
+* **shingle_rows** — the shared substrate: distinct character n-grams as
+  *exploded rows* from ``textops.char_ngrams``, never as interpreted
   higher-order array lambdas. Everything stays inside whole-stage codegen;
-  measured 26x faster than the ``transform``-array formulation on this box.
+  measured 26x faster than the ``transform``-array formulation.
 * **minhash_lsh_pairs** — the LSH trick: candidate pairs come from a
   *band-bucket equi-join* (shuffle keyed on (band, signature)), never from a
   cross join. At 10^12 docs the only quadratic step is within-bucket pair
@@ -19,8 +19,9 @@ Scale notes (the whole point of these being Spark-first):
 * **ngram_jaccard_pairs** — exact pairwise Jaccard via a shared-shingle
   equi-join (shuffle on shingle); the ground-truth oracle for LSH recall.
   Not for 10^12 rows — that is what the LSH path is for.
-* **simhash16_table** — per-token md5-derived 16-bit simhash: explode +
-  one hash-agg with 16 bit-vote sums (map-side combinable).
+* **simhash_table** — per-token md5-derived simhash (16 bits on the gate):
+  explode + one hash-agg with one bit-vote sum per bit (map-side
+  combinable).
 * **embedding near-dup** — cosine >= tau pairs; exact form for verification,
   bucketed/ANN forms in similarity.py for the scale path.
 
@@ -34,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tempeh_spark.partitioning import ROW_MULTIPLYING, spread_if_narrow
-from tempeh_spark.textops import normalize_text
+from tempeh_spark.textops import char_ngrams, normalize_text
 
 
 def exact_dedup_clusters(
@@ -60,27 +61,11 @@ def shingle_rows(
     ngram: int = 3,
     max_chars: int | None = None,
 ) -> DataFrame:
-    """Distinct character n-grams as (id, g) rows — fully codegen'd.
-
-    ``explode(sequence(1, len-n+1))`` + ``substring`` + ``distinct``; the
-    distinct's shuffle doubles as the data spread for downstream joins."""
-    norm = normalize_text(text_col)
-    if max_chars is not None:
-        norm = F.substring(norm, 1, max_chars)
-    base = spread_if_narrow(df, id_col, ROW_MULTIPLYING).select(
-        F.col(id_col).alias("id"), norm.alias("t")
-    )
-    # Docs shorter than ngram yield NO shingles. Without this filter,
-    # sequence(1, len-n+1) for len < n is sequence(1, 0) == [1, 0]
-    # (Spark sequences run DESCENDING when end < start), fabricating a
-    # partial-text shingle ('' for empty docs) — and diverging from SQL
-    # engines where generate_series(1, 0) is empty.
-    pos = base.where(F.length("t") >= ngram).select(
-        "id",
-        "t",
-        F.explode(F.sequence(F.lit(1), F.length("t") - (ngram - 1))).alias("i"),
-    )
-    return pos.select("id", F.expr(f"substring(t, i, {ngram})").alias("g")).distinct()
+    """Distinct character n-grams as (id, g) rows: ``char_ngrams`` plus
+    ``distinct``; the distinct's shuffle doubles as the data spread for
+    downstream joins."""
+    base = spread_if_narrow(df, id_col, ROW_MULTIPLYING)
+    return char_ngrams(base, [F.col(id_col).alias("id")], text_col, ngram, max_chars).distinct()
 
 
 def ngram_jaccard_pairs(
@@ -395,13 +380,6 @@ def simhash_table(
             F.lit(0).cast("long")
         )
     return agg.select("id", total.alias("simhash"))
-
-
-def simhash16_table(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """16-bit form (the original gate surface); see simhash_table."""
-    return simhash_table(df, id_col, text_col, bits=16)
 
 
 def _band_ranges(bits: int, bands: int) -> list[tuple[int, int]]:
@@ -724,17 +702,7 @@ def dedup_decisions(
         comp = duplicate_components(edges, max_iter=max_iter)
     finally:
         sh.unpersist()
-    return (
-        df.select(F.col(id_col).alias("doc_id"))
-        .join(comp, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("component"), F.col("doc_id")).alias("keeper"),
-            (F.coalesce(F.col("component"), F.col("doc_id")) == F.col("doc_id")).alias(
-                "keep"
-            ),
-        )
-    )
+    return _keepers(df, id_col, comp)
 
 
 def embedding_dedup_decisions(
@@ -758,16 +726,17 @@ def embedding_dedup_decisions(
     if pairs is None:
         pairs = embedding_near_pairs(vecs, id_col, vec_col, threshold)
     comp = duplicate_components(pairs.select("id_a", "id_b"), max_iter=max_iter)
+    return _keepers(vecs, id_col, comp)
+
+
+def _keepers(df: DataFrame, id_col: str, comp: DataFrame) -> DataFrame:
+    """(doc_id, keeper, keep) for every row of ``df``: a document's keeper
+    is its component id, or itself when no edge touched it."""
+    keeper = F.coalesce(F.col("component"), F.col("doc_id"))
     return (
-        vecs.select(F.col(id_col).alias("doc_id"))
+        df.select(F.col(id_col).alias("doc_id"))
         .join(comp, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("component"), F.col("doc_id")).alias("keeper"),
-            (F.coalesce(F.col("component"), F.col("doc_id")) == F.col("doc_id")).alias(
-                "keep"
-            ),
-        )
+        .select("doc_id", keeper.alias("keeper"), (keeper == F.col("doc_id")).alias("keep"))
     )
 
 

@@ -14,8 +14,8 @@ Scale Multitask Learning"), chosen here because it is:
   norm is an exact BIGINT sum of 64 squares (< 2^53, so the double cast is
   exact), and each output component is ONE IEEE division — bit-identical
   across Spark and DuckDB, so the whole vector is oracle-twinnable;
-* **the right Spark shape** — n-gram explode (codegen ``sequence`` +
-  ``substring``, the ``dedup.shingle_rows`` pattern WITH multiplicity) into
+* **the right Spark shape** — the ``textops.char_ngrams`` explode (codegen
+  ``sequence`` + ``substring``, kept as a bag: no ``distinct``) into
   ONE hash aggregation with ``dim`` conditional-sum columns (map-side
   combinable, same wide-agg trick as ``minhash_signatures_wide``); one
   shuffle total, no UDF, no per-row Python.
@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tempeh_spark.partitioning import ROW_MULTIPLYING, spread_if_narrow
-from tempeh_spark.textops import normalize_text
+from tempeh_spark.textops import char_ngrams
 
 
 def text_embedding(
@@ -57,30 +57,14 @@ def text_embedding(
     counts are then <= max_chars, keeping the exact-integer norm far from
     2^53 at any document size (uncapped: safe to ~3e7-char docs at dim 64).
     """
-    norm = normalize_text(text_col)
-    if max_chars is not None:
-        norm = F.substring(norm, 1, max_chars)
-    base = spread_if_narrow(df, id_col, ROW_MULTIPLYING).select(
-        F.col(id_col).alias("id"), norm.alias("t")
-    )
-    # multiplicity KEPT (bag, not set): no distinct — contrast shingle_rows.
-    # Same short-doc guard: sequence(1, end<1) runs descending in Spark.
-    pos = base.where(F.length("t") >= ngram).select(
-        "id",
-        "t",
-        F.explode(F.sequence(F.lit(1), F.length("t") - (ngram - 1))).alias("i"),
-    )
+    base = spread_if_narrow(df, id_col, ROW_MULTIPLYING)
+    # multiplicity KEPT (bag, not set): no distinct — contrast shingle_rows
+    grams = char_ngrams(base, [F.col(id_col).alias("id")], text_col, ngram, max_chars)
     bucket = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(F.encode(F.expr(f"substring(t, i, {ngram})"), "UTF-8")), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long"),
+        F.conv(F.substring(F.md5(F.encode(F.col("g"), "UTF-8")), 1, 8), 16, 10).cast("long"),
         F.lit(dim),
     )
-    bucketed = pos.select("id", bucket.alias("b"))
+    bucketed = grams.select("id", bucket.alias("b"))
     wide = bucketed.groupBy("id").agg(
         *[F.sum((F.col("b") == k).cast("long")).alias(f"c{k}") for k in range(dim)]
     )

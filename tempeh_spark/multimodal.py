@@ -15,7 +15,6 @@ from __future__ import annotations
 import hashlib
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame

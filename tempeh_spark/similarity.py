@@ -44,6 +44,22 @@ def _dot(x: Column, y: Column) -> Column:
     return F.aggregate(F.zip_with(x, y, lambda a, b: a * b), F.lit(0.0), lambda acc, v: acc + v)
 
 
+def _rounded_cosine() -> Column:
+    """cosine(q_vec, nbr_vec) rounded to 4 decimals, never -0.0."""
+    return (F.round(cosine(F.col("q_vec"), F.col("nbr_vec")), 4) + F.lit(0.0)).alias("cosine")
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best (query_id, nbr_id, cosine) rows per query: highest
+    cosine first, ties broken by the smaller nbr_id."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("nbr_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "rank", "nbr_id", "cosine")
+    )
+
+
 def brute_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -56,16 +72,9 @@ def brute_topk(
     c = corpus.select(F.col(id_col).alias("nbr_id"), F.col(vec_col).alias("nbr_vec"))
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
     scored = c.join(F.broadcast(q), F.col("query_id") != F.col("nbr_id")).select(
-        "query_id",
-        "nbr_id",
-        (F.round(cosine(F.col("q_vec"), F.col("nbr_vec")), 4) + F.lit(0.0)).alias("cosine"),
+        "query_id", "nbr_id", _rounded_cosine()
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("nbr_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "nbr_id", "cosine")
-    )
+    return _topk(scored, k)
 
 
 def ivf_topk(
@@ -86,17 +95,8 @@ def ivf_topk(
     )
     scored = c.join(F.broadcast(q), on="cell").where(
         F.col("query_id") != F.col("nbr_id")
-    ).select(
-        "query_id",
-        "nbr_id",
-        (F.round(cosine(F.col("q_vec"), F.col("nbr_vec")), 4) + F.lit(0.0)).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("nbr_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "nbr_id", "cosine")
-    )
+    ).select("query_id", "nbr_id", _rounded_cosine())
+    return _topk(scored, k)
 
 
 def ivf_centroids(
@@ -188,18 +188,9 @@ def ivf_multiprobe_topk(
     scored = (
         c.join(F.broadcast(probes), on="cell")
         .where(F.col("query_id") != F.col("nbr_id"))
-        .select(
-            "query_id",
-            "nbr_id",
-            (F.round(cosine(F.col("q_vec"), F.col("nbr_vec")), 4) + F.lit(0.0)).alias("cosine"),
-        )
+        .select("query_id", "nbr_id", _rounded_cosine())
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("nbr_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "nbr_id", "cosine")
-    )
+    return _topk(scored, k)
 
 
 def lsh_signature(
@@ -415,12 +406,7 @@ def lsh_bucket_topk(
             )
             .where(F.col("cosine").isNotNull() & ~F.isnan(F.col("cosine")))
         )
-        w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("nbr_id"))
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "rank", "nbr_id", "cosine")
-        )
+        return _topk(scored, k)
 
     # Candidate generation on SKINNY rows: the probe join and the
     # (query_id, nbr_id) dedup shuffle carry ids only — never the vectors.
@@ -448,15 +434,6 @@ def lsh_bucket_topk(
     scored = (
         cand.join(F.broadcast(qv), "query_id")
         .join(cv, "nbr_id")
-        .select(
-            "query_id",
-            "nbr_id",
-            (F.round(cosine(F.col("q_vec"), F.col("nbr_vec")), 4) + F.lit(0.0)).alias("cosine"),
-        )
+        .select("query_id", "nbr_id", _rounded_cosine())
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("nbr_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "nbr_id", "cosine")
-    )
+    return _topk(scored, k)

@@ -8,12 +8,14 @@ dialect-portable constructs (regexp classes are RE2/Java-compatible, float
 outputs are rounded).
 
 At 100 TB these run as map-only projections over the extracted ``text``
-column: no shuffle, no UDF, fully pushdown-friendly.
+column: no shuffle, no UDF, fully pushdown-friendly. ``char_ngrams`` and
+``word_ngrams`` are the one n-gram explode every shingling operator uses
+(map-only too: one row per gram, no shuffle).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # stopword regexes per language (tiny, deterministic language-ID heuristic)
@@ -115,14 +117,59 @@ def fingerprint(col: Column | str = "text") -> Column:
     return F.md5(F.encode(normalize_text(col), "UTF-8"))
 
 
+def char_ngrams(
+    df: DataFrame,
+    keys: list[Column | str],
+    text_col: Column | str,
+    ngram: int,
+    max_chars: int | None = None,
+) -> DataFrame:
+    """Character n-grams as exploded ``(keys..., g)`` rows: one row per
+    start position of ``normalize_text(text_col)``, capped to its first
+    ``max_chars`` characters. A bag (repeats kept); callers that want a set
+    add ``distinct``. Pure codegen (``explode(sequence)`` + ``substring``),
+    the form everything that scales with corpus size uses. Does not spread
+    its input: callers ``spread_if_narrow`` first.
+
+    Texts shorter than ``ngram`` (NULL and empty included) give no rows:
+    Spark's ``sequence(1, end<1)`` runs DESCENDING and would fabricate a
+    partial-text gram that ``generate_series`` in a SQL twin never emits.
+    The twin is ``__spark_entry__._char_ngrams_sql``."""
+    norm = normalize_text(text_col)
+    if max_chars is not None:
+        norm = F.substring(norm, 1, max_chars)
+    base = df.select(*keys, norm.alias("t"))
+    names = base.columns[:-1]
+    pos = base.where(F.length("t") >= ngram).select(
+        *names, "t", F.explode(F.sequence(F.lit(1), F.length("t") - (ngram - 1))).alias("i")
+    )
+    return pos.select(*names, F.expr(f"substring(t, i, {ngram})").alias("g"))
+
+
+def word_ngrams(
+    df: DataFrame, keys: list[Column | str], words: Column | str, ngram: int
+) -> DataFrame:
+    """Word n-grams of a word-array column as exploded ``(keys..., g)``
+    rows: ``ngram`` consecutive words joined by one space, one row per start
+    position, repeats kept. Arrays with fewer than ``ngram`` words (and
+    NULL) give no rows, the guard ``char_ngrams`` documents. The twin is
+    ``__spark_entry__._word_ngrams_sql``."""
+    base = df.select(*keys, (F.col(words) if isinstance(words, str) else words).alias("ws"))
+    names = base.columns[:-1]
+    pos = base.where(F.size("ws") >= ngram).select(
+        *names, "ws", F.explode(F.sequence(F.lit(1), F.size("ws") - (ngram - 1))).alias("i")
+    )
+    return pos.select(*names, F.array_join(F.slice("ws", F.col("i"), ngram), " ").alias("g"))
+
+
 def shingle_array(norm: Column, ngram: int) -> Column:
     """Distinct character n-grams of an ALREADY-normalized column as an
-    array (interpreted HOF — per-row convenience form; use
-    dedup.shingle_rows for anything that scales with corpus size).
+    array: the per-row form of ``char_ngrams`` (an interpreted HOF, for
+    per-row sketches only; anything that scales with corpus size explodes
+    rows through ``char_ngrams``).
 
-    The single home of the short-doc guard: Spark sequence(1, end<1) runs
-    DESCENDING and would fabricate a partial-text shingle no SQL engine
-    emits — short docs get an EMPTY array."""
+    Same short-doc guard as ``char_ngrams``: short docs get an EMPTY array,
+    never the partial-text shingle a descending ``sequence`` would make."""
     grams = F.array_distinct(
         F.transform(
             F.sequence(F.lit(1), F.length(norm) - (ngram - 1)),

@@ -27,7 +27,7 @@ l, c``; text ``textContent, l, c``; doctype/comment likewise.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from tempeh_spark.tokenizer import (
     ATTR_NAME,

@@ -47,9 +47,9 @@ def test_minhash_lsh_recall(spark, docs):
 
 
 def test_simhash_consistency(spark, docs):
-    from tempeh_spark.dedup import simhash16_table, simhash_near_pairs
+    from tempeh_spark.dedup import simhash_near_pairs, simhash_table
 
-    sh = {r["id"]: r["simhash"] for r in simhash16_table(docs).collect()}
+    sh = {r["id"]: r["simhash"] for r in simhash_table(docs, bits=16).collect()}
     assert sh[1] == sh[2]  # identical text -> identical simhash
     assert 0 <= sh[1] < 2**16
     assert 6 not in sh  # zero-token docs are dropped (matches the SQL twin)
@@ -156,6 +156,56 @@ def test_bottomk_sketch_similarity(spark, docs):
     }
     assert out[1] == out[2]
     assert out[1] != out[4]
+
+
+def _grams(df) -> dict:
+    out = {}
+    for r in df.collect():
+        out.setdefault(tuple(r[:-1]), []).append(r["g"])
+    return {k: sorted(v) for k, v in out.items()}
+
+
+def test_char_ngrams_rows(spark):
+    from tempeh_spark.textops import char_ngrams
+
+    df = spark.createDataFrame(
+        [(1, "a", "ab"), (2, "a", "aBc"), (3, "a", ""), (4, "a", None),
+         (5, "a", "  Ab \t AB\n ab "), (5, "b", "abcd")],
+        "k1 long, k2 string, text string",
+    )
+    grams = char_ngrams(df, ["k1", "k2"], "text", 3)
+    assert grams.columns == ["k1", "k2", "g"]
+    # shorter than n, empty and NULL give no rows; length n gives one;
+    # repeats are kept ("ab ab ab" has two of each gram)
+    assert _grams(grams) == {
+        (2, "a"): ["abc"],
+        (5, "a"): [" ab", " ab", "ab ", "ab ", "b a", "b a"],
+        (5, "b"): ["abc", "bcd"],
+    }
+    # the cap cuts the NORMALIZED text: "ab a", not the raw "  Ab"
+    capped = char_ngrams(df, [F.col("k1").alias("id")], "text", 3, max_chars=4)
+    assert capped.columns == ["id", "g"]
+    assert _grams(capped) == {(2,): ["abc"], (5,): ["ab ", "abc", "b a", "bcd"]}
+
+
+def test_word_ngrams_rows(spark):
+    from tempeh_spark.corpusops import _words
+    from tempeh_spark.textops import word_ngrams
+
+    df = spark.createDataFrame(
+        [(1, " a  b\t\tc \n d "), (2, "a b"), (3, "x y z"), (4, None), (5, "a b a b")],
+        "id long, text string",
+    )
+    grams = word_ngrams(df, ["id"], _words("text"), 3)
+    # whitespace runs split once; fewer words than n give no rows
+    assert _grams(grams) == {
+        (1,): ["a b c", "b c d"],
+        (3,): ["x y z"],
+        (5,): ["a b a", "b a b"],
+    }
+    assert _grams(word_ngrams(df.where("id = 5"), ["id"], _words("text"), 2)) == {
+        (5,): ["a b", "a b", "b a"]
+    }
 
 
 def test_duplicate_components(spark):

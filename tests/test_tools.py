@@ -114,3 +114,30 @@ def test_engine_code_is_reached_outside_tests():
     assert unreached_engine_code() == set()
     # the kept ones are still unreached; once code reaches one, drop it above
     assert unreached_engine_code(kept={}) == set(UNREACHED_KEPT)
+
+
+def unused_engine_imports() -> set[tuple[str, str]]:
+    """(module, name) of every module-level import in ``tempeh_spark`` whose
+    bound name the module never uses and does not list in ``__all__``."""
+    unused = set()
+    for path in ENGINE:
+        tree = ast.parse(path.read_text())
+        bound, exported = set(), set()
+        for node in tree.body:
+            if isinstance(node, ast.Import):
+                bound.update(a.asname or a.name.split(".")[0] for a in node.names)
+            elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+                bound.update(a.asname or a.name for a in node.names)
+            elif isinstance(node, ast.Assign) and any(
+                isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
+            ):
+                exported.update(ast.literal_eval(node.value))
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        unused.update((path.stem, name) for name in bound - used - exported)
+    return unused
+
+
+def test_engine_imports_are_used():
+    # no linter runs here, so an import left behind by a deletion stays
+    # until something checks: every module-level import must be used
+    assert unused_engine_imports() == set()
