@@ -57,6 +57,86 @@ def _word_ngrams_sql(ws: str, n: int) -> str:
     )
 
 
+# The vector twins. Each piece of embedding arithmetic is spelled ONCE here,
+# in the exact operation order of its vecmath / grid_mean counterpart.
+
+
+def _emb_cte(name: str = "e", carry: str = "") -> str:
+    """CTE ``name(vec_id, [carry,] v)``: the gate embeddings as DOUBLE lists
+    (vecmath's products against double operands run in f64)."""
+    cols = f"vec_id, {carry}, " if carry else "vec_id, "
+    return (
+        f"{name} AS (SELECT {cols}list_transform(embedding, x -> x::DOUBLE) AS v "
+        "FROM embeddings)"
+    )
+
+
+def _cos_sql(x: str, y: str) -> str:
+    """``round(cosine(x, y), 4)``: twin of ``vecmath.cosine`` rounded like
+    every ranking (callers that emit it add ``+ 0`` against -0.0)."""
+    return (
+        f"round(list_dot_product({x}, {y}) / "
+        f"(sqrt(list_dot_product({x}, {x})) * sqrt(list_dot_product({y}, {y}))), 4)"
+    )
+
+
+def _grid_mean_sql(x: str) -> str:
+    """Aggregate twin of ``vecmath.grid_mean``'s ``m``: BIGINT
+    ``floor(x * 2^20 + 0.5)`` units summed exactly, one IEEE division chain."""
+    from tempeh_spark.vecmath import GRID_BITS
+
+    scale = repr(float(1 << GRID_BITS))
+    return f"(sum(floor({x} * {scale} + 0.5)::BIGINT)::DOUBLE / count(*)) / {scale}"
+
+
+def _bucket_sql(vec_expr: str, dim: int, n_planes: int, plane_offset: int = 0) -> str:
+    """One band's hyperplane signature, twin of ``similarity.lsh_signature``
+    and of one band of ``vecmath.band_buckets_udf``: the md5-derived planes
+    (``vecmath._hyperplane``) are literal DOUBLE lists, bit b = sign(dot(vec,
+    plane_{offset+b})), same products summed in the same order as
+    ``vecmath._plane_signs``."""
+    from tempeh_spark.vecmath import _hyperplane
+
+    terms = []
+    for p in range(n_planes):
+        lit = "[" + ", ".join(repr(x) for x in _hyperplane(dim, plane_offset + p)) + "]"
+        terms.append(
+            f"(CASE WHEN list_dot_product({vec_expr}, {lit}) >= 0 THEN {1 << p} ELSE 0 END)"
+        )
+    return "(" + " + ".join(terms) + ")"
+
+
+def _band_probe_sql(src: str, vec: str, n_bands: int, ppb: int, carry: str = "") -> str:
+    """``(vec_id, [carry,] band, bucket)`` probe rows of ``src``: one SELECT
+    per band over disjoint plane sets (band b uses planes b*ppb ..), the
+    twin of ``posexplode(band_buckets_udf(...))``."""
+    cols = f"vec_id, {carry}, " if carry else "vec_id, "
+    return "\nUNION ALL\n".join(
+        f"SELECT {cols}{b} AS band, {_bucket_sql(vec, 64, ppb, b * ppb)} AS bucket FROM {src}"
+        for b in range(n_bands)
+    )
+
+
+def _nearest_cell_sql(cents: list[list[float]]) -> tuple[str, str, str]:
+    """(the ``d{j}`` columns, cell, dist) over ``v``: twin of
+    ``clustering._assign_udf``. ``d{j} = (v.v - 2 * v.c_j) + c_j.c_j`` in
+    that association order with ``c_j.c_j`` summed left to right in Python;
+    the cell is the FIRST minimal ``j`` (np.argmin's tie-break)."""
+    d_cols = []
+    for j, c in enumerate(cents):
+        lit = "[" + ", ".join(repr(x) for x in c) + "]"
+        cc = 0.0
+        for x in c:
+            cc += x * x
+        d_cols.append(
+            f"(list_dot_product(v, v) - 2 * list_dot_product(v, {lit})) + {cc!r} AS d{j}"
+        )
+    m = "least(" + ", ".join(f"d{j}" for j in range(len(cents))) + ")"
+    cell = "CASE " + " ".join(f"WHEN d{j} = {m} THEN {j}" for j in range(len(cents))) + " END"
+    dist = "CASE " + " ".join(f"WHEN d{j} = {m} THEN d{j}" for j in range(len(cents))) + " END"
+    return ", ".join(d_cols), cell, dist
+
+
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
@@ -473,26 +553,10 @@ def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_kmeans_assign() -> str:
-    cents = _gate_centroids()
-    d_cols = []
-    for j, c in enumerate(cents):
-        lit = "[" + ", ".join(repr(x) for x in c) + "]"
-        cc = 0.0
-        for x in c:
-            cc += x * x
-        d_cols.append(
-            f"(list_dot_product(v, v) - 2 * list_dot_product(v, {lit})) + {cc!r} AS d{j}"
-        )
-    m = "least(" + ", ".join(f"d{j}" for j in range(len(cents))) + ")"
-    cell = (
-        "CASE "
-        + " ".join(f"WHEN d{j} = {m} THEN {j}" for j in range(len(cents)))
-        + " END"
-    )
-    dist = "CASE " + " ".join(f"WHEN d{j} = {m} THEN d{j}" for j in range(len(cents))) + " END"
+    d_cols, cell, dist = _nearest_cell_sql(_gate_centroids())
     return f"""
-WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-d AS (SELECT vec_id, {", ".join(d_cols)} FROM e)
+WITH {_emb_cte()},
+d AS (SELECT vec_id, {d_cols} FROM e)
 SELECT vec_id::BIGINT AS vec_id,
        ({cell})::INTEGER AS cell,
        (round({dist}, 4) + 0) AS dist2
@@ -519,25 +583,10 @@ def q_kmeans_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_kmeans_update() -> str:
-    cents = _gate_centroids()
-    d_cols = []
-    for j, c in enumerate(cents):
-        lit = "[" + ", ".join(repr(x) for x in c) + "]"
-        cc = 0.0
-        for x in c:
-            cc += x * x
-        d_cols.append(
-            f"(list_dot_product(v, v) - 2 * list_dot_product(v, {lit})) + {cc!r} AS d{j}"
-        )
-    m = "least(" + ", ".join(f"d{j}" for j in range(len(cents))) + ")"
-    cell = (
-        "CASE "
-        + " ".join(f"WHEN d{j} = {m} THEN {j}" for j in range(len(cents)))
-        + " END"
-    )
+    d_cols, cell, _ = _nearest_cell_sql(_gate_centroids())
     return f"""
-WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-d AS (SELECT vec_id, v, {", ".join(d_cols)} FROM e),
+WITH {_emb_cte()},
+d AS (SELECT vec_id, v, {d_cols} FROM e),
 a AS (SELECT v, ({cell})::INTEGER AS cell FROM d),
 x AS (
   SELECT cell, unnest(generate_series(0, len(v) - 1)) AS i, unnest(v) AS x
@@ -545,8 +594,7 @@ x AS (
 )
 SELECT cell,
        i::INTEGER AS i,
-       ((CAST(sum(CAST(floor(x * 1048576.0 + 0.5) AS BIGINT)) AS DOUBLE)
-         / count(*)) / 1048576.0 + 0.0) AS m,
+       ({_grid_mean_sql('x')} + 0.0) AS m,
        count(*)::BIGINT AS n
 FROM x GROUP BY cell, i
 """
@@ -2926,12 +2974,6 @@ FROM (SELECT doc_id, {NORM_SQL.format(c='text')} AS t FROM documents)
 """
 
 
-_COS = (
-    "(round(list_dot_product(a.v, b.v) / "
-    "(sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 4) + 0)"
-)
-
-
 def _text_emb_ctes(dim: int = 64, ngram: int = 3) -> str:
     """CTE block ending in ``temb(doc_id, v)`` — twin of
     featurize.text_embedding: hashed bag of char n-grams (md5 first-8-hex
@@ -2968,9 +3010,9 @@ def _oracle_text_neardup() -> str:
     return f"""
 WITH {_text_emb_ctes().strip()},
 e AS (SELECT doc_id AS vec_id, v FROM temb)
-SELECT a.vec_id::BIGINT AS id_a, b.vec_id::BIGINT AS id_b, {_COS} AS cosine
+SELECT a.vec_id::BIGINT AS id_a, b.vec_id::BIGINT AS id_b, ({_cos_sql('a.v', 'b.v')} + 0) AS cosine
 FROM e a JOIN e b ON a.vec_id < b.vec_id
-WHERE {_COS} >= 0.98
+WHERE ({_cos_sql('a.v', 'b.v')} + 0) >= 0.98
 """
 
 
@@ -2984,7 +3026,7 @@ e AS (SELECT doc_id AS vec_id, v FROM temb),
 np AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b
   FROM e a JOIN e b ON a.vec_id < b.vec_id
-  WHERE {_COS} >= 0.98
+  WHERE ({_cos_sql('a.v', 'b.v')} + 0) >= 0.98
 ),
 edges AS (
   SELECT id_a AS s, id_b AS d FROM np
@@ -3006,29 +3048,15 @@ FROM documents LEFT JOIN comp ON documents.doc_id = comp.doc_id
 """
 
 
-def _np_band_selects(n_bands: int = 12, planes_per_band: int = 16) -> str:
-    """CENTERED banded hyperplane signatures over the featurizer vectors
-    (assumes CTE ``ce(vec_id, cv)`` in scope — mean-subtracted vectors) —
-    twin of similarity.embedding_lsh_near_pairs(center=True) at the
-    pipeline_decisions gate parameters (12 bands x 16 planes; centering is
-    what makes hyperplane buckets discriminate on direction-concentrated
-    text vectors — see the operator docstring's 1250x measurement). The
-    hyperplanes are deterministic md5-derived literals and the dot-product
-    fold order matches vecmath, so bucket bits are bit-equal cross-engine."""
-    return "\nUNION ALL\n".join(
-        f"SELECT vec_id, {b} AS band, "
-        f"{_bucket_sql('cv', 64, planes_per_band, b * planes_per_band)} AS bucket FROM ce"
-        for b in range(n_bands)
-    )
-
-
 def _oracle_pipeline_decisions() -> str:
     """Recursive-CTE transitive closure over ALL THREE duplicate-evidence
     families — exact-digest cliques (equivalent to the Spark side's star
     edges by construction), verified minhash-LSH pairs, and embedding
     cosine near-dup pairs RESTRICTED to the same banded-LSH candidates the
     Spark side generates (identical hyperplane literals over the
-    bit-twinned featurizer vectors) — then every document left-joined in."""
+    bit-twinned featurizer vectors, centered on the ``vmu`` grid mean:
+    ``embedding_lsh_near_pairs(center=True)`` at 12 bands x 16 planes) —
+    then every document left-joined in."""
     return f"""
 WITH RECURSIVE {_minhash_lsh_ctes().strip()},
 {_text_emb_ctes().strip()},
@@ -3038,9 +3066,7 @@ dig AS (
 e AS (SELECT doc_id AS vec_id, v FROM temb),
 vmu AS (
   SELECT list(m ORDER BY i) AS mv FROM (
-    SELECT i,
-           (sum(floor(v[i] * 1048576.0 + 0.5)::BIGINT)::DOUBLE / count(*))
-             / 1048576.0 AS m
+    SELECT i, {_grid_mean_sql('v[i]')} AS m
     FROM e, range(1, 65) t(i) GROUP BY i)
 ),
 ce AS (
@@ -3048,7 +3074,7 @@ ce AS (
          list_transform(generate_series(1, 64), i -> v[i] - mv[i]) AS cv
   FROM e, vmu
 ),
-np_probe AS ({_np_band_selects()}),
+np_probe AS ({_band_probe_sql('ce', 'cv', 12, 16)}),
 np_cand AS (
   SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
   FROM np_probe a
@@ -3060,8 +3086,7 @@ np AS (
   FROM np_cand
   JOIN e ea ON ea.vec_id = id_a
   JOIN e eb ON eb.vec_id = id_b
-  WHERE (round(list_dot_product(ea.v, eb.v) /
-              (sqrt(list_dot_product(ea.v, ea.v)) * sqrt(list_dot_product(eb.v, eb.v))), 4) + 0) >= 0.98
+  WHERE ({_cos_sql('ea.v', 'eb.v')} + 0) >= 0.98
 ),
 edges AS (
   SELECT id_a AS s, id_b AS d FROM mh_pairs
@@ -3090,26 +3115,10 @@ FROM documents LEFT JOIN comp ON documents.doc_id = comp.doc_id
 
 
 def _oracle_text_kmeans() -> str:
-    cents = _gate_centroids()
-    d_cols = []
-    for j, c in enumerate(cents):
-        lit = "[" + ", ".join(repr(x) for x in c) + "]"
-        cc = 0.0
-        for x in c:
-            cc += x * x
-        d_cols.append(
-            f"(list_dot_product(v, v) - 2 * list_dot_product(v, {lit})) + {cc!r} AS d{j}"
-        )
-    m = "least(" + ", ".join(f"d{j}" for j in range(len(cents))) + ")"
-    cell = (
-        "CASE "
-        + " ".join(f"WHEN d{j} = {m} THEN {j}" for j in range(len(cents)))
-        + " END"
-    )
-    dist = "CASE " + " ".join(f"WHEN d{j} = {m} THEN d{j}" for j in range(len(cents))) + " END"
+    d_cols, cell, dist = _nearest_cell_sql(_gate_centroids())
     return f"""
 WITH {_text_emb_ctes().strip()},
-d AS (SELECT doc_id AS vec_id, {", ".join(d_cols)} FROM temb)
+d AS (SELECT doc_id AS vec_id, {d_cols} FROM temb)
 SELECT vec_id::BIGINT AS vec_id,
        ({cell})::INTEGER AS cell,
        (round({dist}, 4) + 0) AS dist2
@@ -3119,21 +3128,20 @@ FROM d
 
 def _oracle_embedding_neardup() -> str:
     return f"""
-WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings)
-SELECT a.vec_id::BIGINT AS id_a, b.vec_id::BIGINT AS id_b, {_COS} AS cosine
+WITH {_emb_cte()}
+SELECT a.vec_id::BIGINT AS id_a, b.vec_id::BIGINT AS id_b, ({_cos_sql('a.v', 'b.v')} + 0) AS cosine
 FROM e a JOIN e b ON a.vec_id < b.vec_id
-WHERE {_COS} >= 0.30
+WHERE ({_cos_sql('a.v', 'b.v')} + 0) >= 0.30
 """
 
 
 def _oracle_brute_topk() -> str:
     return f"""
-WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
+WITH {_emb_cte()},
 q AS (SELECT * FROM e WHERE vec_id < 5),
 scored AS (
   SELECT q.vec_id AS query_id, e.vec_id AS nbr_id,
-         (round(list_dot_product(q.v, e.v) /
-               (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(e.v, e.v))), 4) + 0) AS cosine
+         ({_cos_sql('q.v', 'e.v')} + 0) AS cosine
   FROM q JOIN e ON q.vec_id <> e.vec_id
 ),
 ranked AS (
@@ -3146,32 +3154,11 @@ FROM ranked WHERE rank <= 10
 """
 
 
-def _bucket_sql(vec_expr: str, dim: int, n_planes: int, plane_offset: int = 0) -> str:
-    """DuckDB twin of similarity.lsh_signature: the md5-derived hyperplanes
-    are deterministic Python constants, so the oracle embeds them as literal
-    DOUBLE lists — bit b = sign(dot(vec, plane_{offset+b})), same products
-    summed in the same order as Spark's zip_with/aggregate fold."""
-    from tempeh_spark.similarity import _hyperplane
-
-    terms = []
-    for p in range(n_planes):
-        lit = "[" + ", ".join(repr(x) for x in _hyperplane(dim, plane_offset + p)) + "]"
-        terms.append(
-            f"(CASE WHEN list_dot_product({vec_expr}, {lit}) >= 0 THEN {1 << p} ELSE 0 END)"
-        )
-    return "(" + " + ".join(terms) + ")"
-
-
 def _lsh_topk_ctes(n_planes: int = 3, n_bands: int = 12) -> str:
     """Banded multi-probe topk CTEs (assumes CTE ``e`` is in scope): twin of
     similarity.lsh_bucket_topk at the gate parameters."""
-    band_selects = "\nUNION ALL\n".join(
-        f"SELECT vec_id, v, {b} AS band, "
-        f"{_bucket_sql('v', 64, n_planes, b * n_planes)} AS bucket FROM e"
-        for b in range(n_bands)
-    )
     return f"""
-tprobe AS ({band_selects}),
+tprobe AS ({_band_probe_sql('e', 'v', n_bands, n_planes, carry='v')}),
 tcand AS (
   SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS nbr_id
   FROM tprobe q JOIN tprobe c ON q.band = c.band AND q.bucket = c.bucket AND q.vec_id <> c.vec_id
@@ -3182,8 +3169,7 @@ tranked AS (
          row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, nbr_id ASC) AS rank
   FROM (
     SELECT query_id, nbr_id,
-           (round(list_dot_product(ea.v, eb.v) /
-                 (sqrt(list_dot_product(ea.v, ea.v)) * sqrt(list_dot_product(eb.v, eb.v))), 4) + 0) AS cosine
+           ({_cos_sql('ea.v', 'eb.v')} + 0) AS cosine
     FROM tcand JOIN e ea ON ea.vec_id = query_id JOIN e eb ON eb.vec_id = nbr_id
   )
 )"""
@@ -3194,17 +3180,15 @@ def _ivf_probe_ctes(n_probe: int = 3, dim: int = 64) -> str:
     (per-cell mean via a lateral range over the 64 dims), probes (top
     n_probe cells per query by centroid cosine), ivf3_ranked.
 
-    cent mirrors similarity.ivf_centroids' exact fixed-point gridding
-    (grid_bits=20): floor(x*2^20 + 0.5) BIGINT units summed exactly, then
-    one IEEE division chain — order-independent, bit-equal across engines
-    (avg(double) would sum in engine-specific order and can drift a ulp)."""
+    cent is similarity.ivf_centroids: the ``_grid_mean_sql`` exact
+    fixed-point mean per (label, dim) — order-independent, bit-equal across
+    engines (avg(double) would sum in engine-specific order)."""
     return f"""
-el AS (SELECT vec_id, label, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
+{_emb_cte('el', carry='label')},
 cent AS (
   SELECT label, list(m ORDER BY i) AS cv
   FROM (
-    SELECT label, i,
-           (sum(floor(v[i] * 1048576.0 + 0.5)::BIGINT)::DOUBLE / count(*)) / 1048576.0 AS m
+    SELECT label, i, {_grid_mean_sql('v[i]')} AS m
     FROM el, range(1, {dim + 1}) t(i)
     GROUP BY label, i
   ) GROUP BY label
@@ -3213,8 +3197,7 @@ probes AS (
   SELECT vec_id AS query_id, v AS qv, cell FROM (
     SELECT q.vec_id, q.v, c.label AS cell,
            row_number() OVER (PARTITION BY q.vec_id ORDER BY
-             round(list_dot_product(q.v, c.cv) /
-                   (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.cv, c.cv))), 4) DESC,
+             {_cos_sql('q.v', 'c.cv')} DESC,
              c.label ASC) AS pr
     FROM el q, cent c WHERE q.vec_id < 5
   ) WHERE pr <= {n_probe}
@@ -3224,8 +3207,7 @@ ivf3_ranked AS (
          row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, nbr_id ASC) AS rank
   FROM (
     SELECT p.query_id, e.vec_id AS nbr_id,
-           (round(list_dot_product(p.qv, e.v) /
-                 (sqrt(list_dot_product(p.qv, p.qv)) * sqrt(list_dot_product(e.v, e.v))), 4) + 0) AS cosine
+           ({_cos_sql('p.qv', 'e.v')} + 0) AS cosine
     FROM probes p JOIN el e ON e.label = p.cell AND e.vec_id <> p.query_id
   )
 )"""
@@ -3241,7 +3223,7 @@ FROM ivf3_ranked WHERE rank <= 10
 
 def _oracle_lsh_topk() -> str:
     return f"""
-WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
+WITH {_emb_cte()},
 {_lsh_topk_ctes().strip()}
 SELECT query_id::BIGINT AS query_id, rank::BIGINT AS rank, nbr_id::BIGINT AS nbr_id, cosine
 FROM tranked WHERE rank <= 10
@@ -3252,25 +3234,18 @@ def _lsh_pairs_ctes(threshold: float = 0.30, n_bands: int = 16, planes_per_band:
     """Shared CTE block: e (double vectors), probe (banded signatures),
     lsh_pairs (candidates + exact-cosine verify). Twin of
     similarity.embedding_lsh_near_pairs at the gate parameters."""
-    band_selects = "\nUNION ALL\n".join(
-        f"SELECT vec_id, v, {b} AS band, "
-        f"{_bucket_sql('v', 64, planes_per_band, b * planes_per_band)} AS bucket FROM e"
-        for b in range(n_bands)
-    )
     return f"""
-e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-probe AS ({band_selects}),
+{_emb_cte()},
+probe AS ({_band_probe_sql('e', 'v', n_bands, planes_per_band, carry='v')}),
 cand AS (
   SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
   FROM probe a JOIN probe b ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id
 ),
 lsh_pairs AS (
   SELECT id_a, id_b,
-         (round(list_dot_product(ea.v, eb.v) /
-               (sqrt(list_dot_product(ea.v, ea.v)) * sqrt(list_dot_product(eb.v, eb.v))), 4) + 0) AS cosine
+         ({_cos_sql('ea.v', 'eb.v')} + 0) AS cosine
   FROM cand JOIN e ea ON ea.vec_id = id_a JOIN e eb ON eb.vec_id = id_b
-  WHERE round(list_dot_product(ea.v, eb.v) /
-              (sqrt(list_dot_product(ea.v, ea.v)) * sqrt(list_dot_product(eb.v, eb.v))), 4) >= {threshold}
+  WHERE {_cos_sql('ea.v', 'eb.v')} >= {threshold}
 )"""
 
 
@@ -3290,8 +3265,7 @@ brute AS (
   SELECT query_id, nbr_id FROM (
     SELECT q.vec_id AS query_id, e.vec_id AS nbr_id,
            row_number() OVER (PARTITION BY q.vec_id ORDER BY
-             round(list_dot_product(q.v, e.v) /
-                   (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(e.v, e.v))), 4) DESC,
+             {_cos_sql('q.v', 'e.v')} DESC,
              e.vec_id ASC) AS rank
     FROM q JOIN e ON q.vec_id <> e.vec_id
   ) WHERE rank <= 10
@@ -3302,8 +3276,7 @@ ivf AS (
   SELECT query_id, nbr_id FROM (
     SELECT q.vec_id AS query_id, c.vec_id AS nbr_id,
            row_number() OVER (PARTITION BY q.vec_id ORDER BY
-             round(list_dot_product(q.v, c.v) /
-                   (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v))), 4) DESC,
+             {_cos_sql('q.v', 'c.v')} DESC,
              c.vec_id ASC) AS rank
     FROM el q JOIN el c ON q.label = c.label AND q.vec_id <> c.vec_id
     WHERE q.vec_id < 5
@@ -3313,8 +3286,7 @@ lsh_topk AS (SELECT query_id, nbr_id FROM tranked WHERE rank <= 10),
 exact_pairs AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b
   FROM e a JOIN e b ON a.vec_id < b.vec_id
-  WHERE round(list_dot_product(a.v, b.v) /
-              (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 4) >= 0.30
+  WHERE {_cos_sql('a.v', 'b.v')} >= 0.30
 )
 SELECT 'ivf_topk' AS method,
        (SELECT count(*) FROM ivf JOIN brute USING (query_id, nbr_id))::BIGINT AS n_hits,
@@ -3344,12 +3316,11 @@ SELECT 'lsh_pairs',
 
 def _oracle_ivf_topk() -> str:
     return f"""
-WITH e AS (SELECT vec_id, label, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
+WITH {_emb_cte(carry='label')},
 q AS (SELECT * FROM e WHERE vec_id < 5),
 scored AS (
   SELECT q.vec_id AS query_id, e.vec_id AS nbr_id,
-         (round(list_dot_product(q.v, e.v) /
-               (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(e.v, e.v))), 4) + 0) AS cosine
+         ({_cos_sql('q.v', 'e.v')} + 0) AS cosine
   FROM q JOIN e ON q.label = e.label AND q.vec_id <> e.vec_id
 ),
 ranked AS (

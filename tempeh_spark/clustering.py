@@ -10,12 +10,12 @@ Spark shapes:
   the corpus never shuffles.
 * ``kmeans_fit`` — Lloyd's iterations, MLlib-style: broadcast centroids ->
   map-side assignment -> one hash-agg for per-cell means (posexplode +
-  exact fixed-point BIGINT sums via ``kmeans_update``, map-side
+  exact fixed-point BIGINT sums via ``vecmath.grid_mean``, map-side
   combinable). All corpus data stays on executors; the
   driver sees only the k x dim centroid matrix per round (tiny by
   construction) and the convergence delta. Deterministic: initial
   centroids are the k lowest-id vectors, iteration count fixed, and the
-  per-cell means use EXACT fixed-point accumulation (``kmeans_update`` —
+  per-cell means use EXACT fixed-point accumulation (``grid_mean`` —
   never ``avg(double)``, whose partition-order summation varies by run),
   so reruns produce bit-identical codebooks.
 * ``kmeans_update`` — the gated single update step (DuckDB literal-codebook
@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
-from tempeh_spark.vecmath import _seq_dot, _stack
+from tempeh_spark.vecmath import _seq_dot, _stack, grid_mean
 
 ASSIGN_SCHEMA = StructType(
     [StructField("cell", IntegerType()), StructField("dist2", DoubleType())]
@@ -92,46 +92,18 @@ def kmeans_update(
     df: DataFrame,
     centroids: list[list[float]],
     vec_col: str = "embedding",
-    grid_bits: int = 20,
 ) -> DataFrame:
     """One Lloyd's update step: assign every vector to its nearest centroid
-    (broadcast-closure Arrow pass, no shuffle), then per-(cell, dim) means
-    in EXACT fixed-point arithmetic. Returns (cell, i, m, n) rows.
-
-    Order-independence: ``F.avg(double)`` sums in partition order, so two
-    runs (or two engines) can differ in the last ulp — enough to flip a
-    later argmin. Instead each coordinate is gridded to ``2**-grid_bits``
-    units via ``floor(x * 2**grid_bits + 0.5)`` (plain IEEE multiply/add/
-    floor — bit-identical in Spark and DuckDB), the BIGINT units are summed
-    exactly (any partition order), and one IEEE division chain produces the
-    mean. The result is deterministic across reruns, partitionings, and
-    engines; quantization error is <= 2**-(grid_bits+1) per element.
-
-    grid_bits=20 keeps |sum| < 2**53 (exact in the double cast) for cells
-    up to ~2**30 members at |x| <= 4 — raise partitional k or lower
-    grid_bits beyond that scale.
+    (broadcast-closure Arrow pass, no shuffle), then the per-(cell, dim)
+    means of ``vecmath.grid_mean`` (exact fixed-point, order-independent,
+    so reruns, partitionings and engines agree bit for bit). Returns
+    (cell, i, m, n) rows.
 
     Physical shape: one ArrowEvalPython projection + posexplode + a single
     map-side-combined hash-agg on (cell, i) — k*dim output rows."""
     a = _assign_udf(centroids)
-    scale = float(1 << grid_bits)
-    return (
-        df.select(F.col(vec_col).alias("v"), a(F.col(vec_col))["cell"].alias("cell"))
-        .select("cell", F.posexplode("v").alias("i", "x"))
-        .groupBy("cell", "i")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.floor(F.col("x").cast("double") * scale + F.lit(0.5)).cast("long")
-            ).alias("units"),
-        )
-        .select(
-            "cell",
-            "i",
-            ((F.col("units").cast("double") / F.col("n")) / F.lit(scale)).alias("m"),
-            "n",
-        )
-    )
+    cells = df.select(F.col(vec_col).alias("v"), a(F.col(vec_col))["cell"].alias("cell"))
+    return grid_mean(cells, ["cell"], "v")
 
 
 def kmeans_fit(

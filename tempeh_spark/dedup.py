@@ -120,18 +120,11 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signatures_wide(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = 16,
-    ngram: int = 3,
-    max_chars: int | None = None,
-    shingles: DataFrame | None = None,
-) -> DataFrame:
-    """Wide minhash signature: (id, mh0..mh{k-1}) in ONE hash aggregation
-    over the un-exploded shingle rows — k ``min(md5('p<k>:' || g))``
-    aggregate columns, all md5s inside codegen, fully map-side combinable.
+def minhash_signatures_wide(shingles: DataFrame, num_perm: int = 16) -> DataFrame:
+    """Wide minhash signature: (id, mh0..mh{k-1}) of the (id, g) rows
+    ``shingles`` in ONE hash aggregation over the un-exploded shingle rows
+    — k ``min(md5('p<k>:' || g))`` aggregate columns, all md5s inside
+    codegen, fully map-side combinable.
 
     This is the scale shape: the k-permutation fan-out lives in the
     aggregate expression list, NOT in the row count, so the agg's shuffle
@@ -140,22 +133,7 @@ def minhash_signatures_wide(
 
     Hex-string min is a valid permutation min-hash (md5 is the random
     permutation; lexicographic order on hex = numeric order on the digest),
-    expressible identically in DuckDB for the oracle.
-
-    ``shingles`` lets a caller that already built the (id, g) rows (the
-    LSH verify step needs them too) pass them in — without it the dominant
-    normalize+explode+distinct stage would run twice per dedup job.
-
-    Without ``shingles`` this function runs Spark jobs while it builds the
-    DataFrame: the shingle rows go through ``localCheckpoint(eager=False)``,
-    and under AQE that call runs their upstream shuffle stages at once."""
-    sh = (
-        shingles
-        if shingles is not None
-        else shingle_rows(df, id_col, text_col, ngram, max_chars).localCheckpoint(
-            eager=False
-        )
-    )
+    expressible identically in DuckDB for the oracle."""
     # NOTE r7: a "hash once per DISTINCT g" dictionary join was tried here
     # (md5 is a pure function of g, so the 16 permutation hashes can be
     # computed over ~13.6k distinct shingles instead of 10.9M occurrence
@@ -169,7 +147,7 @@ def minhash_signatures_wide(
         ).alias(f"mh{k}")
         for k in range(num_perm)
     ]
-    return sh.groupBy("id").agg(*aggs)
+    return shingles.groupBy("id").agg(*aggs)
 
 
 def minhash_signatures(
@@ -182,7 +160,9 @@ def minhash_signatures(
 ) -> DataFrame:
     """Tall form (id, k, mh) of ``minhash_signatures_wide`` — the per-doc
     unpivot explode is num_perm rows per doc AFTER aggregation, not before."""
-    wide = minhash_signatures_wide(df, id_col, text_col, num_perm, ngram, max_chars)
+    wide = minhash_signatures_wide(
+        shingle_rows(df, id_col, text_col, ngram, max_chars), num_perm
+    )
     kms = F.array(
         *[
             F.struct(F.lit(k).alias("k"), F.col(f"mh{k}").alias("mh"))
@@ -245,9 +225,7 @@ def minhash_lsh_pairs(
             eager=False
         )
     )
-    wide = minhash_signatures_wide(
-        df, id_col, text_col, num_perm, ngram, max_chars, shingles=sh
-    )
+    wide = minhash_signatures_wide(sh, num_perm)
     # band signatures straight off the wide columns: one explode of a
     # bands-long array per doc — no second groupBy/collect_list shuffle
     band_structs = [
@@ -462,12 +440,16 @@ def simhash_near_pairs(
     )
 
 
+# duplicate_components: mirrored-edge count up to which the driver
+# union-find runs, and the round budget of the distributed min-label loop
+DRIVER_EDGE_LIMIT = 1_000_000
+MAX_ROUNDS = 30
+
+
 def duplicate_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 30,
-    driver_edge_limit: int = 1_000_000,
 ) -> DataFrame:
     """Connected components over a near-dup pair graph: (doc_id, component)
     where component = min doc id reachable — the keeper-assignment step that
@@ -477,7 +459,7 @@ def duplicate_components(
     adaptive move AQE makes for join strategies — the logical result is
     identical either way):
 
-    * ``0 < n_edges <= driver_edge_limit``: union-find on the driver. The
+    * ``0 < n_edges <= DRIVER_EDGE_LIMIT``: union-find on the driver. The
       dup graph is already a corpus-scale REDUCTION (one row per verified
       near-dup pair), and below the limit a driver pass beats 2+ rounds of
       join/agg/sync stages by seconds of pure scheduling latency. Driver
@@ -493,8 +475,9 @@ def duplicate_components(
       convergence needs O(component diameter) rounds (tiny for dup
       clusters, which are near-cliques). All data stays on executors; the
       driver sees a one-row convergence count per round, with
-      ``localCheckpoint`` truncating lineage every few rounds. Set
-      ``driver_edge_limit=0`` to force this path (the tests do).
+      ``localCheckpoint`` truncating lineage every few rounds, at most
+      ``MAX_ROUNDS`` rounds. ``DRIVER_EDGE_LIMIT = 0`` forces this path
+      (the tests monkeypatch it).
 
     The DuckDB oracle computes the TRUE transitive closure with a recursive
     CTE, so the gate verifies the fixpoint, not the procedure.
@@ -524,13 +507,13 @@ def duplicate_components(
     # the strategy gate counts PRE-distinct MIRRORED rows — union-find is
     # idempotent to duplicate edges, so the fast path skips the distinct's
     # shuffle entirely. Mirroring doubles every pair, so the effective gate
-    # is <= driver_edge_limit/2 DISTINCT input pairs (fewer if the input
+    # is <= DRIVER_EDGE_LIMIT/2 DISTINCT input pairs (fewer if the input
     # repeats pairs); a deliberately conservative bound — overshooting only
     # routes a borderline graph to the always-correct distributed loop.
     n_edges = raw.count()
-    # strict > 0 on the limit so driver_edge_limit=0 genuinely forces the
+    # strict > 0 on the limit so DRIVER_EDGE_LIMIT=0 genuinely forces the
     # distributed loop even for an empty edge set (test/coverage contract)
-    if 0 < driver_edge_limit and n_edges <= driver_edge_limit:
+    if 0 < DRIVER_EDGE_LIMIT and n_edges <= DRIVER_EDGE_LIMIT:
         from pyspark.sql.types import StructField, StructType
 
         parent: dict = {}
@@ -582,7 +565,7 @@ def duplicate_components(
     # persisted object; it is released only after the next round's table is
     # materialized (the `changed` agg forces it).
     prev_cached = labels
-    for it in range(max_iter):
+    for it in range(MAX_ROUNDS):
         nbr_min = (
             edges.join(labels, edges.s == labels.v)
             .groupBy(F.col("d").alias("v2"))
@@ -615,10 +598,13 @@ def duplicate_components(
     edges.unpersist()
     if not converged:
         # returning intermediate labels would silently split components —
-        # a diameter > max_iter graph needs a bigger budget, loudly
+        # a diameter > MAX_ROUNDS graph needs a bigger budget, loudly. The
+        # last round's persisted labels go first, or they stay cached.
+        if prev_cached is not None:
+            prev_cached.unpersist()
         raise RuntimeError(
-            f"duplicate_components did not converge in {max_iter} rounds "
-            f"(component diameter exceeds max_iter); raise max_iter"
+            f"duplicate_components did not converge in {MAX_ROUNDS} rounds "
+            f"(component diameter exceeds dedup.MAX_ROUNDS); raise MAX_ROUNDS"
         )
     # materialize the answer, then release the loop's cached blocks: a
     # long-lived session calling this repeatedly must not accumulate
@@ -640,7 +626,6 @@ def dedup_decisions(
     ngram: int = 8,
     verify_threshold: float = 0.4,
     max_chars: int | None = None,
-    max_iter: int = 30,
     extra_pairs: DataFrame | None = None,
 ) -> DataFrame:
     """The end-to-end dedup deliverable a training-data pipeline consumes:
@@ -699,7 +684,7 @@ def dedup_decisions(
     if extra_pairs is not None:
         edges = edges.unionByName(extra_pairs.select("id_a", "id_b"))
     try:
-        comp = duplicate_components(edges, max_iter=max_iter)
+        comp = duplicate_components(edges)
     finally:
         sh.unpersist()
     return _keepers(df, id_col, comp)
@@ -710,7 +695,6 @@ def embedding_dedup_decisions(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
-    max_iter: int = 30,
     pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Embedding-space end-to-end dedup: (doc_id, keeper, keep) from
@@ -725,7 +709,7 @@ def embedding_dedup_decisions(
     identical either way."""
     if pairs is None:
         pairs = embedding_near_pairs(vecs, id_col, vec_col, threshold)
-    comp = duplicate_components(pairs.select("id_a", "id_b"), max_iter=max_iter)
+    comp = duplicate_components(pairs.select("id_a", "id_b"))
     return _keepers(vecs, id_col, comp)
 
 

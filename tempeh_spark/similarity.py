@@ -35,6 +35,7 @@ from tempeh_spark.vecmath import (
     blocked_pairs,
     bucket_pair_kernel,
     cosine,
+    grid_mean,
     masked_cosine_udf,
 )
 
@@ -103,35 +104,16 @@ def ivf_centroids(
     corpus: DataFrame,
     vec_col: str = "embedding",
     cell_col: str = "label",
-    grid_bits: int = 20,
 ) -> DataFrame:
-    """Per-cell mean vector: posexplode -> (cell, dim) exact fixed-point
-    mean -> re-assemble. Output is n_cells rows — broadcastable at any
-    corpus scale (the shuffle carries n_cells x dim partial sums, map-side
-    combined).
-
-    Determinism: ``F.avg(double)`` combines shuffled map-side partials in
-    nondeterministic fetch order, and a last-ulp drift landing on a .00005
-    boundary of the rounded ``cell_score`` could flip a probe set between
-    runs/engines. Same cure as ``clustering.kmeans_update``: grid each
-    coordinate to ``2**-grid_bits`` units (floor(x*2^g + 0.5) — plain IEEE
-    multiply/add/floor, bit-identical in Spark and DuckDB), sum the BIGINT
-    units exactly in any order, then one IEEE division chain."""
-    scale = float(1 << grid_bits)
-    pos = corpus.select(
-        F.col(cell_col).alias("cell"), F.posexplode(F.col(vec_col)).alias("i", "x")
-    )
-    per_dim = pos.groupBy("cell", "i").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.floor(F.col("x").cast("double") * scale + F.lit(0.5)).cast("long")
-        ).alias("units"),
-    )
-    return per_dim.select(
-        "cell",
-        "i",
-        ((F.col("units").cast("double") / F.col("n")) / F.lit(scale)).alias("m"),
-    ).groupBy("cell").agg(
+    """Per-cell mean vector: the exact fixed-point ``vecmath.grid_mean`` per
+    (cell, dim), re-assembled into one ``centroid`` array per cell. Output
+    is n_cells rows — broadcastable at any corpus scale (the shuffle
+    carries n_cells x dim partial sums, map-side combined). The mean is
+    order-independent, so the rounded ``cell_score`` and hence the probe
+    set cannot drift between runs or engines (``avg(double)`` could, by a
+    last ulp landing on a .00005 boundary)."""
+    per_dim = grid_mean(corpus, [F.col(cell_col).alias("cell")], vec_col)
+    return per_dim.groupBy("cell").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("i", "m"))), lambda s: s["m"]
         ).alias("centroid")
@@ -254,8 +236,8 @@ def embedding_lsh_near_pairs(
     at sf0.1 text embeddings, median pairwise cosine 0.846: uncentered
     8x8 banding emitted 16.57M candidate rows for 255 true pairs;
     centered 12x16 emitted 13.2k at 0.992 recall — a 1250x cut). The mean
-    is one 64-row collect of per-dim BIGINT ``floor(x*2^20 + 0.5)`` sums
-    (order-independent, so reruns and the SQL oracle get the identical
+    is one dim-row collect of ``vecmath.grid_mean`` (exact fixed-point,
+    order-independent, so reruns and the SQL oracle get the identical
     mean bit-for-bit); verification still uses the ORIGINAL cosine.
     Centered recall has no clean analytic bound (pairs near the mean can
     shrink to tiny centered norms) — measure per corpus family; the SQL
@@ -282,23 +264,10 @@ def embedding_lsh_near_pairs(
     v = v.localCheckpoint(eager=False)
     mu = None
     if center:
-        rows = (
-            v.select(F.posexplode("vec").alias("i", "x"))
-            .groupBy("i")
-            .agg(
-                F.sum(
-                    F.expr("cast(floor(x * 1048576.0 + 0.5) as bigint)")
-                ).alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .collect()  # dim rows — a per-job scalar, not corpus data
-        )
         mu = [0.0] * dim
-        for r in rows:
-            # float(S)/n, not S/n: Python int/int is correctly-rounded
-            # EXACT division and would diverge from the oracle's
-            # S::DOUBLE / n once S exceeds 2^53
-            mu[r["i"]] = (float(r["s"]) / r["n"]) / 1048576.0
+        # dim rows — a per-job scalar, not corpus data
+        for r in grid_mean(v, [], "vec").collect():
+            mu[r["i"]] = r["m"]
     # Verify INSIDE each (band, bucket) group instead of materializing the
     # candidate pair rows: the r6 shape (band equi-join -> dropDuplicates ->
     # two vector re-attach joins -> per-row Arrow cosine) built the full

@@ -73,6 +73,47 @@ def cosine(x: Column, y: Column) -> Column:
     return _cosine_kernel(x, y)
 
 
+GRID_BITS = 20  # grid_mean's fixed-point resolution: 2**-20 units
+
+
+def grid_mean(df: DataFrame, keys: list, vec_col: str) -> DataFrame:
+    """Exact per-(keys, dim) mean of the vectors in ``vec_col``: rows
+    ``(keys..., i, m, n)`` with ``i`` the 0-based dim, ``n`` the count.
+
+    ``avg(double)`` sums in partition order, so two runs (or two engines)
+    can differ in the last ulp — enough to flip a later argmin, probe set
+    or sign bit. Instead each coordinate is gridded to ``2**-GRID_BITS``
+    units via ``floor(x * 2**GRID_BITS + 0.5)`` (plain IEEE multiply/add/
+    floor, bit-identical in Spark and DuckDB), the BIGINT units are summed
+    exactly in any order, and one IEEE division chain ``units / n / 2**20``
+    gives the mean: deterministic across reruns, partitionings and engines
+    (the oracle twin is ``_grid_mean_sql``). Quantization error is <=
+    2**-21 per element; |sum| stays < 2**53 (exact in the double cast) for
+    groups up to ~2**30 members at |x| <= 4.
+
+    ``keys`` are column names or Columns; the output carries their names.
+    Physical shape: posexplode + ONE map-side-combined hash-agg on
+    (keys, i)."""
+    scale = float(1 << GRID_BITS)
+    pos = df.select(*keys, F.posexplode(vec_col).alias("i", "x"))
+    names = pos.columns[:-2]
+    return (
+        pos.groupBy(*names, "i")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(
+                F.floor(F.col("x").cast("double") * scale + F.lit(0.5)).cast("long")
+            ).alias("units"),
+        )
+        .select(
+            *names,
+            "i",
+            ((F.col("units").cast("double") / F.col("n")) / F.lit(scale)).alias("m"),
+            "n",
+        )
+    )
+
+
 def _hyperplane(dim: int, plane: int) -> list[float]:
     """Deterministic pseudo-random hyperplane: component value from md5
     bytes of (plane, index). No RNG state — reproducible anywhere, so the
@@ -83,6 +124,31 @@ def _hyperplane(dim: int, plane: int) -> list[float]:
         v = int.from_bytes(h[:4], "big") / 2**31 - 1.0  # [-1, 1)
         out.append(v)
     return out
+
+
+def _planes(dim: int, total: int) -> np.ndarray:
+    """The first ``total`` hyperplanes as a (total, dim) float64 matrix."""
+    return np.array([_hyperplane(dim, p) for p in range(total)], dtype=np.float64)
+
+
+def _plane_signs(V: np.ndarray, planes: np.ndarray, mu=None) -> np.ndarray:
+    """bool (n, total): ``dot(v - mu, plane) >= 0`` for every row and plane.
+
+    The ONE hyperplane-sign fold: float64 products summed sequentially over
+    the dims (the interpreted fold's order, which the oracle's
+    ``list_dot_product`` over literal planes reproduces). ``mu`` is an
+    optional length-dim center subtracted per dim INSIDE the fold — one
+    exact IEEE op per element, so the oracle's ``v[i] - mu[i]`` list
+    matches bit for bit."""
+    V = V.astype(np.float64, copy=False)
+    acc = np.zeros((V.shape[0], planes.shape[0]), dtype=np.float64)
+    if mu is None:
+        for i in range(planes.shape[1]):
+            acc += V[:, i : i + 1] * planes[:, i]
+    else:
+        for i in range(planes.shape[1]):
+            acc += (V[:, i : i + 1] - mu[i]) * planes[:, i]
+    return acc >= 0.0
 
 
 def band_buckets_udf(
@@ -103,37 +169,25 @@ def band_buckets_udf(
     document shares the dominant char-3-gram directions; measured median
     pairwise cosine 0.846 at sf0.1), which makes uncentered hyperplanes
     nearly useless as a blocking key; subtracting the corpus mean spreads
-    the angles. The subtraction is one exact IEEE op per element, computed
-    per-dim INSIDE the sequential fold so the oracle's
-    ``list_dot_product(list_transform(.. v[i] - mu[i] ..), plane)``
-    reproduces the bits exactly."""
+    the angles. The signs come from ``_plane_signs`` (the one fold, center
+    inside it); this UDF only packs them, one int32 per band."""
     if planes_per_band > 31:
         raise ValueError(
             f"planes_per_band={planes_per_band} > 31: band signatures are "
             "int32 and the bit weights would silently wrap (int64 -> int32 "
             "astype), corrupting bucket keys"
         )
-    total = n_bands * planes_per_band
-    planes = np.array(
-        [_hyperplane(dim, p) for p in range(total)], dtype=np.float64
-    )  # (total, dim)
+    planes = _planes(dim, n_bands * planes_per_band)
     weights = 1 << np.arange(planes_per_band, dtype=np.int64)
     mu = None if center is None else np.asarray(center, dtype=np.float64)
 
     @pandas_udf(ArrayType(IntegerType()))
     def _buckets(vecs: pd.Series) -> pd.Series:
-        V = _stack(vecs).astype(np.float64, copy=False)  # planes are double
+        V = _stack(vecs)
         n = V.shape[0]
         if n == 0:
             return pd.Series([], dtype=object)
-        acc = np.zeros((n, total), dtype=np.float64)
-        if mu is None:
-            for i in range(dim):
-                acc += V[:, i : i + 1] * planes[:, i]
-        else:
-            for i in range(dim):
-                acc += (V[:, i : i + 1] - mu[i]) * planes[:, i]
-        bits = acc >= 0.0
+        bits = _plane_signs(V, planes, mu)
         out = (bits.reshape(n, n_bands, planes_per_band) * weights).sum(axis=2)
         return pd.Series(list(out.astype(np.int32)))
 
@@ -319,10 +373,9 @@ def role_pair_kernel(threshold: float, bands=None):
     ``bands=(dim, n_bands, planes_per_band, center)`` additionally requires
     the pair to share at least one full hyperplane band — the candidate set
     of the banded (band, bucket) equi-join, bit-for-bit. Signatures are
-    computed in-kernel with the exact ``band_buckets_udf`` arithmetic (same
-    sequential plane-dot fold, same >= 0 sign test, optional centering) and
-    packed into one int64, so every pair is scored ONCE instead of once per
-    colliding band in per-bucket groups."""
+    computed in-kernel by ``_plane_signs`` (the ``band_buckets_udf`` fold,
+    optional centering included) and packed into one int64, so every pair
+    is scored ONCE instead of once per colliding band in per-bucket groups."""
     cutoff = threshold - 1e-4
     packed_sigs = None
     if bands is not None:
@@ -330,20 +383,12 @@ def role_pair_kernel(threshold: float, bands=None):
         total = n_bands * planes_per_band
         if total > 63:
             raise ValueError("packed signatures need n_bands * planes_per_band <= 63")
-        planes = np.array([_hyperplane(dim, p) for p in range(total)], dtype=np.float64)
+        planes = _planes(dim, total)
         weights = np.int64(1) << np.arange(total, dtype=np.int64)
         mu = None if center is None else np.asarray(center, dtype=np.float64)
 
         def packed_sigs(X: np.ndarray) -> np.ndarray:
-            V = X.astype(np.float64, copy=False)
-            acc = np.zeros((V.shape[0], total), dtype=np.float64)
-            if mu is None:
-                for i in range(dim):
-                    acc += V[:, i : i + 1] * planes[:, i]
-            else:
-                for i in range(dim):
-                    acc += (V[:, i : i + 1] - mu[i]) * planes[:, i]
-            return ((acc >= 0.0) * weights).sum(axis=1).astype(np.int64)
+            return (_plane_signs(X, planes, mu) * weights).sum(axis=1).astype(np.int64)
 
     def _k(pdf: pd.DataFrame) -> pd.DataFrame:
         a = pdf[pdf["role"] == 0]
@@ -419,21 +464,15 @@ def masked_cosine_udf(dim: int, n_bands: int, planes_per_band: int):
     in extra UDF stages. Per-pair bucket recompute is O(Q x N x planes) —
     only for the broadcast strategy; the equi-join path owns large Q.
     """
-    total = n_bands * planes_per_band
-    planes = np.array([_hyperplane(dim, p) for p in range(total)], dtype=np.float64)
-
-    def _sigs(V64: np.ndarray) -> np.ndarray:
-        acc = np.zeros((V64.shape[0], total), dtype=np.float64)
-        for i in range(dim):
-            acc += V64[:, i : i + 1] * planes[:, i]
-        return (acc >= 0.0).reshape(-1, n_bands, planes_per_band)
+    planes = _planes(dim, n_bands * planes_per_band)
 
     def _uniq_sigs(ids: pd.Series, M: np.ndarray) -> np.ndarray:
         """Signatures per row, computed once per DISTINCT id: the joined
         batch repeats each query |corpus| times and each corpus row |Q|
         times, so de-duplicating the sig compute cuts it ~(Q+N)/(Q*N)."""
         _, idx, inv = np.unique(ids.to_numpy(), return_index=True, return_inverse=True)
-        return _sigs(M[idx].astype(np.float64, copy=False))[inv]
+        sigs = _plane_signs(M[idx], planes).reshape(-1, n_bands, planes_per_band)
+        return sigs[inv]
 
     @pandas_udf(DoubleType())
     def _masked(

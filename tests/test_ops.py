@@ -208,19 +208,21 @@ def test_word_ngrams_rows(spark):
     }
 
 
-def test_duplicate_components(spark):
+def test_duplicate_components(spark, monkeypatch):
     """Both physical strategies (driver union-find fast path AND the
     distributed min-label loop) must reach the same transitive-closure
     fixpoint — including a 6-node path (diameter > 1 hop) and a separate
     2-clique."""
+    from tempeh_spark import dedup
     from tempeh_spark.dedup import duplicate_components
 
     pairs = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (10, 11), (11, 10)]
     df = spark.createDataFrame(pairs, "id_a long, id_b long")
     for limit in (5_000_000, 0):  # fast path, then forced distributed loop
+        monkeypatch.setattr(dedup, "DRIVER_EDGE_LIMIT", limit)
         comp = {
             r["doc_id"]: r["component"]
-            for r in duplicate_components(df, driver_edge_limit=limit).collect()
+            for r in duplicate_components(df).collect()
         }
         assert all(comp[v] == 1 for v in (1, 2, 3, 4, 5, 6)), limit
         assert comp[10] == 10 and comp[11] == 10, limit
@@ -498,18 +500,36 @@ def test_kmeans_fit_and_assign(spark):
     assert out.count() == 15
 
 
-def test_duplicate_components_null_ids(spark):
+def test_duplicate_components_null_ids(spark, monkeypatch):
     """NULL-id pairs are malformed evidence: dropped before mirroring, so
     BOTH physical strategies agree — no TypeError in the driver union-find
     and no phantom singleton from the distributed loop."""
+    from tempeh_spark import dedup
     from tempeh_spark.dedup import duplicate_components
 
     pairs = [(1, 2), (2, 3), (None, 7), (8, None), (None, None), (10, 11)]
     df = spark.createDataFrame(pairs, "id_a long, id_b long")
     for limit in (5_000_000, 0):  # fast path, then forced distributed loop
-        rows = duplicate_components(df, driver_edge_limit=limit).collect()
+        monkeypatch.setattr(dedup, "DRIVER_EDGE_LIMIT", limit)
+        rows = duplicate_components(df).collect()
         comp = {r["doc_id"]: r["component"] for r in rows}
         assert comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}, limit  # 7/8/None absent
+
+
+def test_duplicate_components_nonconvergence_releases_cache(spark, monkeypatch):
+    """A loop that runs out of rounds raises, and leaves nothing cached: the
+    edges AND the last round's persisted labels are released."""
+    from tempeh_spark import dedup
+
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    monkeypatch.setattr(dedup, "DRIVER_EDGE_LIMIT", 0)
+    monkeypatch.setattr(dedup, "MAX_ROUNDS", 2)
+    path = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6)]  # needs 5 rounds
+    df = spark.createDataFrame(path, "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="MAX_ROUNDS"):
+        dedup.duplicate_components(df)
+    assert cache.isEmpty()
 
 
 def test_dedup_decisions_extra_pairs_union(spark):

@@ -1,6 +1,7 @@
 """The command-line tools and bench.py stay importable, do no work at
 import, and every engine name they import still exists; every public
-engine function or class is reached from code outside the tests."""
+engine function or class is reached from code outside the tests; each
+twinned vector operation is spelled in one place per engine."""
 
 from __future__ import annotations
 
@@ -141,3 +142,54 @@ def test_engine_imports_are_used():
     # no linter runs here, so an import left behind by a deletion stays
     # until something checks: every module-level import must be used
     assert unused_engine_imports() == set()
+
+
+def source_homes(path: Path, needle: str) -> set[str]:
+    """The top-level statements of ``path`` whose source holds ``needle``:
+    a function or class by its name, an assignment by its target."""
+    text = path.read_text()
+    homes = set()
+    for node in ast.parse(text).body:
+        if needle not in ast.get_source_segment(text, node):
+            continue
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            homes.add(node.name)
+        elif isinstance(node, ast.Assign) and isinstance(node.targets[0], ast.Name):
+            homes.add(node.targets[0].id)
+        else:
+            homes.add(f"{path.name}:{node.lineno}")
+    return homes
+
+
+# the spelling of each twinned vector operation -> the one helper that holds it
+VECTOR_SQL_HOMES = {
+    "sqrt(list_dot_product": "_cos_sql",
+    "x -> x::DOUBLE": "_emb_cte",
+    "AS bucket FROM": "_band_probe_sql",
+    "2 * list_dot_product(v": "_nearest_cell_sql",
+}
+# 2**20 may be spelled out only by the fixed-point mean; the HLL oracle's
+# 2**w register units (w = 20) are another constant
+GRID_HOMES = {"GRID_BITS", "grid_mean", "_grid_mean_sql", "_oracle_hll_distinct"}
+
+
+def test_vector_twins_have_one_home():
+    # an inline copy of a twinned operation can drift from its helper and
+    # from the other engine; every copy must go through the helper
+    files = [REPO / "__spark_entry__.py", *ENGINE]
+
+    def homes(needle: str) -> set[str]:
+        return set().union(*(source_homes(path, needle) for path in files))
+
+    for needle, helper in VECTOR_SQL_HOMES.items():
+        assert homes(needle) == {helper}, needle
+    assert homes("1048576") <= GRID_HOMES
+    # the hyperplane matrix, and so the sign fold's planes, is built in one place
+    vecmath = ast.parse((REPO / "tempeh_spark" / "vecmath.py").read_text())
+    callers = {
+        getattr(node, "name", node.lineno)
+        for node in vecmath.body
+        for n in ast.walk(node)
+        if isinstance(n, ast.Call) and getattr(n.func, "id", None) == "_hyperplane"
+    }
+    assert callers == {"_planes"}
