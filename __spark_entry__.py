@@ -137,12 +137,18 @@ def _nearest_cell_sql(cents: list[list[float]]) -> tuple[str, str, str]:
     return ", ".join(d_cols), cell, dist
 
 
+# the known table schemas: a parquet read given its schema runs no
+# schema-inference job while a query is only being built
+DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
+EMB_SCHEMA = "vec_id long, embedding array<float>, label int"
+
+
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return spark.read.schema(DOCS_SCHEMA).parquet(f"{sf_dir}/documents.parquet")
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return spark.read.schema(EMB_SCHEMA).parquet(f"{sf_dir}/embeddings.parquet")
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -21,6 +21,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from tempeh_spark.session import local_frame
+
 import os
 
 FIXTURE_DIR = Path(
@@ -65,7 +67,7 @@ def fixture_pages(spark: SparkSession, fixture_dir: str | Path | None = None) ->
         )
         for i, (name, data) in enumerate(sorted(fx.items()))
     ]
-    return spark.createDataFrame(rows, PAGES_SCHEMA)
+    return local_frame(spark, rows, PAGES_SCHEMA)
 
 
 def bench_pages(
@@ -84,9 +86,7 @@ def bench_pages(
     fx = fixture_bytes(fixture_dir)
     names = sorted(fx.keys())
     payloads = [(i, n, fx[n]) for i, n in enumerate(names)]
-    pay_df = spark.createDataFrame(
-        payloads, "fixture_id int, fixture_name string, html binary"
-    )
+    pay_df = local_frame(spark, payloads, "fixture_id int, fixture_name string, html binary")
     rng = spark.range(n_rows).withColumn(
         "fixture_id", (F.col("id") % len(names)).cast("int")
     )

@@ -10,8 +10,8 @@ Scale notes (the whole point of these being Spark-first):
   *exploded rows* from ``textops.char_ngrams``, never as interpreted
   higher-order array lambdas. Everything stays inside whole-stage codegen;
   measured 26x faster than the ``transform``-array formulation.
-* **minhash_lsh_pairs** — the LSH trick: candidate pairs come from a
-  *band-bucket equi-join* (shuffle keyed on (band, signature)), never from a
+* **minhash_lsh_pairs** — the LSH trick: candidate pairs come from *one
+  group per band bucket* (shuffle keyed on (band, signature)), never from a
   cross join. At 10^12 docs the only quadratic step is within-bucket pair
   expansion, bounded by bucket size; the verify step re-checks true Jaccard
   on candidates only. Signatures are min-of-md5-hex per permutation —
@@ -174,6 +174,45 @@ def minhash_signatures(
     )
 
 
+def band_signatures(shingles: DataFrame, num_perm: int = 16, bands: int = 4) -> DataFrame:
+    """(id, band, sig) rows: each document's ``bands`` LSH band keys, the
+    ``num_perm // bands`` consecutive minhash columns of a band joined by
+    ``|``, straight off ``minhash_signatures_wide`` — one explode of a
+    bands-long array per doc, no second groupBy/collect_list shuffle."""
+    rows_per_band = num_perm // bands
+    wide = minhash_signatures_wide(shingles, num_perm)
+    band_structs = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.concat_ws(
+                "|", *[F.col(f"mh{b * rows_per_band + i}") for i in range(rows_per_band)]
+            ).alias("sig"),
+        )
+        for b in range(bands)
+    ]
+    return wide.select("id", F.explode(F.array(*band_structs)).alias("bs")).select(
+        "id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
+    )
+
+
+def lsh_candidates(banded: DataFrame) -> DataFrame:
+    """Distinct (id_a, id_b) pairs, id_a < id_b, that share a (band, sig)
+    bucket of the (id, band, sig) rows ``banded``.
+
+    One group per bucket: buckets of two or more distinct ids expand into
+    their pairs, so the only quadratic step is within a bucket. A self-join
+    on (band, sig) would plan the whole ``banded`` subtree (the signature
+    aggregation) once per side."""
+    ids = banded.groupBy("band", "sig").agg(F.collect_set("id").alias("ids"))
+    return (
+        ids.where(F.size("ids") >= 2)
+        .select(F.explode("ids").alias("id_a"), "ids")
+        .select("id_a", F.explode("ids").alias("id_b"))
+        .where(F.col("id_a") < F.col("id_b"))
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -188,8 +227,9 @@ def minhash_lsh_pairs(
     """LSH candidate generation + exact-Jaccard verification.
 
     bands of rows=num_perm/bands; candidates = pairs sharing any band
-    signature (equi-join on (band, signature) — never a cross join);
-    verified against true shingle Jaccard >= verify_threshold.
+    signature (``lsh_candidates``: one group per (band, signature) bucket
+    — never a cross join); verified against true shingle Jaccard >=
+    verify_threshold.
 
     ``shingles``: pre-built (id, g) rows. The shingle subtree feeds FOUR
     consumers here (signatures, per-doc counts, both verify sides); a
@@ -210,7 +250,6 @@ def minhash_lsh_pairs(
             f"trailing {num_perm % bands} permutations would be computed but "
             f"never banded, silently lowering recall"
         )
-    rows_per_band = num_perm // bands
     # FIVE consumers read the shingle table here (hash dictionary,
     # signature join, per-doc counts, both verify sides): materialize it
     # once. localCheckpoint, not persist() — ContextCleaner releases
@@ -225,42 +264,10 @@ def minhash_lsh_pairs(
             eager=False
         )
     )
-    wide = minhash_signatures_wide(sh, num_perm)
-    # band signatures straight off the wide columns: one explode of a
-    # bands-long array per doc — no second groupBy/collect_list shuffle
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                "|", *[F.col(f"mh{b * rows_per_band + i}") for i in range(rows_per_band)]
-            ).alias("sig"),
-        )
-        for b in range(bands)
-    ]
-    banded = wide.select("id", F.explode(F.array(*band_structs)).alias("bs")).select(
-        "id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
-    )
-    # NOT checkpointed: both self-join sides duplicate the signature-agg
-    # subtree, but the two executions run CONCURRENTLY on idle cores and a
-    # checkpoint here serializes them — measured 9.6 s (checkpointed) vs
-    # 9.2 s (duplicated) for minhash_lsh at sf1.0; same result for the
-    # simhash banded join below
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        # three consumers (the two candidate-doc id lists + the
-        # intersection join): checkpoint so the banded self-join runs once.
-        # Its shuffle stages (signature agg, join) run here, at build time.
-        .localCheckpoint(eager=False)
-    )
+    # three consumers (the two candidate-doc id lists + the intersection
+    # join): checkpoint so the candidate pairs are computed once. Their
+    # shuffle stages (signature agg, bucket agg) run here, at build time.
+    cand = lsh_candidates(band_signatures(sh, num_perm, bands)).localCheckpoint(eager=False)
 
     # verify: true Jaccard, restricted to candidates. The r5 note here
     # warned that semi-joining sh down to candidate ids "re-executes the
@@ -417,9 +424,9 @@ def simhash_near_pairs(
     banded = sh.select(
         "id", "simhash", F.explode(F.array(*probes)).alias("bk")
     ).select("id", "simhash", "bk.band", "bk.key")
-    # NOT checkpointed (unlike minhash_lsh_pairs): the duplicated vote-agg
-    # subtree is small enough that both sides build it concurrently on
-    # idle cores — measured 5.1 -> 6.0 s at sf1.0 WITH a checkpoint here
+    # the self-join plans the vote-agg subtree once per side (the hamming
+    # filter needs both simhashes); it is small, and a checkpoint here
+    # measured 5.1 -> 6.0 s at sf1.0
     a = banded.alias("a")
     b = banded.alias("b")
     ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")).cast("long"))
@@ -481,6 +488,9 @@ def duplicate_components(
 
     The DuckDB oracle computes the TRUE transitive closure with a recursive
     CTE, so the gate verifies the fixpoint, not the procedure.
+
+    Building this DataFrame runs Spark jobs: the edge count, then the
+    driver path's ``toPandas`` or every round of the loop.
     """
     converged = False
     # Symmetrize with ONE pass over pairs: explode two mirrored structs per
@@ -516,6 +526,8 @@ def duplicate_components(
     if 0 < DRIVER_EDGE_LIMIT and n_edges <= DRIVER_EDGE_LIMIT:
         from pyspark.sql.types import StructField, StructType
 
+        from tempeh_spark.session import local_frame
+
         parent: dict = {}
 
         def find(x):
@@ -524,14 +536,15 @@ def duplicate_components(
                 x = parent[x]
             return x
 
-        # Arrow toPandas, ONE job: two flat columns (~16 MB at the 1M-edge
-        # limit for long ids) — collect() would build n_edges Row objects
-        # (GBs at the limit) and toLocalIterator schedules one sequential
-        # mini-job per partition. raw is already NULL-free (filtered at
+        # Both transfers go through Arrow. In: toPandas, ONE job, two flat
+        # columns (~16 MB at the 1M-edge limit for long ids) — collect()
+        # would build n_edges Row objects (GBs at the limit) and
+        # toLocalIterator schedules one sequential mini-job per partition.
+        # Out: local_frame below. raw is already NULL-free (filtered at
         # construction), so the rd < rs compares below are always valid.
         pdf = raw.toPandas()
         # .tolist() yields plain Python scalars (numpy ints would leak into
-        # the union-find keys and the createDataFrame below)
+        # the union-find keys)
         for s, d in zip(pdf.iloc[:, 0].tolist(), pdf.iloc[:, 1].tolist()):
             parent.setdefault(s, s)
             parent.setdefault(d, d)
@@ -548,7 +561,11 @@ def duplicate_components(
         schema = StructType(
             [StructField("doc_id", id_type), StructField("component", id_type)]
         )
-        return pairs.sparkSession.createDataFrame(out_rows, schema)
+        # one Arrow table, planned as a LocalTableScan: a createDataFrame
+        # of the row list plans as Scan ExistingRDD, whose read starts a
+        # second Python worker pool (train_dedup, 1000 docs on 4 cores:
+        # worker_peak_rss_mb 627 MB with it, 317 MB without)
+        return local_frame(pairs.sparkSession, out_rows, schema)
     edges = raw.distinct().persist()
     edges.count()
     raw.unpersist()

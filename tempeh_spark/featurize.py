@@ -16,8 +16,9 @@ Scale Multitask Learning"), chosen here because it is:
   across Spark and DuckDB, so the whole vector is oracle-twinnable;
 * **the right Spark shape** — the ``textops.char_ngrams`` explode (codegen
   ``sequence`` + ``substring``, kept as a bag: no ``distinct``) into
-  ONE hash aggregation with ``dim`` conditional-sum columns (map-side
-  combinable, same wide-agg trick as ``minhash_signatures_wide``); one
+  ONE hash aggregation keyed by id whose result is one packed ``dim``-long
+  count array (map-side combinable); the norm and the division then run
+  over that fixed-length array, not over ``dim`` separate columns. One
   shuffle total, no UDF, no per-row Python.
 
 Output vectors live in the same dim-64 space shape as the synthetic
@@ -65,16 +66,20 @@ def text_embedding(
         F.lit(dim),
     )
     bucketed = grams.select("id", bucket.alias("b"))
-    wide = bucketed.groupBy("id").agg(
-        *[F.sum((F.col("b") == k).cast("long")).alias(f"c{k}") for k in range(dim)]
+    # the dim per-bucket BIGINT counts as ONE array column: dim separate
+    # columns, with a dim-term norm and a dim-element division array over
+    # them, took ~1 s of driver-side analysis and planning per call
+    counts = bucketed.groupBy("id").agg(
+        F.array(*[F.sum((F.col("b") == k).cast("long")) for k in range(dim)]).alias("c")
     )
-    # exact BIGINT sum of squares, fixed left-to-right expression order
-    sumsq = F.col("c0") * F.col("c0")
-    for k in range(1, dim):
-        sumsq = sumsq + F.col(f"c{k}") * F.col(f"c{k}")
-    l2 = F.sqrt(sumsq.cast("double"))
-    emb = F.array(*[(F.col(f"c{k}").cast("double") / l2) for k in range(dim)])
-    vecs = wide.select("id", emb.alias("embedding"))
+    # exact BIGINT sum of squares (any order is exact); the lambdas run
+    # over dim elements per document, not over its text
+    sumsq = F.aggregate("c", F.lit(0).cast("long"), lambda a, x: a + x * x)
+    vecs = counts.select("id", "c", F.sqrt(sumsq.cast("double")).alias("l2"))
+    # one IEEE division per component, AFTER the join: in the same
+    # projection as the norm, the optimizer inlines the norm into the
+    # division lambda and recomputes it for every component
+    emb = F.transform("c", lambda x: x.cast("double") / F.col("l2"))
     zeros = F.array(*[F.lit(0.0) for _ in range(dim)])
     # Join-back is per INPUT ROW (no distinct — that would add a corpus-
     # wide shuffle just to guard a key-violation case): duplicate ids, a
@@ -84,5 +89,5 @@ def text_embedding(
     return (
         df.select(F.col(id_col).alias("id"))
         .join(vecs, "id", "left")
-        .select("id", F.coalesce(F.col("embedding"), zeros).alias("embedding"))
+        .select("id", F.coalesce(emb, zeros).alias("embedding"))
     )

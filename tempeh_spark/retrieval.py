@@ -59,12 +59,13 @@ def bm25_topk(
     ties broken by ascending doc id for rerun stability."""
     spark = SparkSession.getActiveSession()
     from tempeh_spark.partitioning import ROW_MULTIPLYING, spread_if_narrow
+    from tempeh_spark.session import local_frame
 
     # toks feeds dls AND the probe join; a one-partition scan runs both
     # token explodes on one core
     df = spread_if_narrow(df, id_col, ROW_MULTIPLYING)
     qdf = F.broadcast(
-        spark.createDataFrame(queries, "query_id string, term string").distinct()
+        local_frame(spark, queries, "query_id string, term string").distinct()
     )
     toks = df.select(
         F.col(id_col).alias("doc_id"),

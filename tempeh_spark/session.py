@@ -1,4 +1,6 @@
-"""SparkSession builder with the engine's tuned defaults.
+"""SparkSession builder with the engine's tuned defaults, and
+``local_frame``, the one way the engine turns driver-side rows into a
+DataFrame.
 
 Local mode stands in for a cluster in this sandbox; every setting is chosen
 for multi-executor scale-out semantics (partition counts, Arrow batch sizing,
@@ -10,7 +12,7 @@ from __future__ import annotations
 import os
 import warnings
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def build_session(
@@ -92,3 +94,31 @@ def build_session(
                     stacklevel=2,
                 )
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list, schema) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples in ``schema`` order),
+    sent to the JVM as one Arrow table, so it plans as a ``LocalTableScan``.
+    ``spark.createDataFrame`` of a Python list plans as ``Scan ExistingRDD``
+    of pickled rows instead, and the first action over it starts a second
+    Python worker pool (``pyspark.daemon`` plus its workers) in the
+    executors. The engine's one ``createDataFrame`` call
+    (tests/test_tools.py::test_local_rows_have_one_home).
+
+    ``schema`` is a ``StructType`` or a DDL string. Values convert as
+    ``createDataFrame`` converts list rows (``DataType.toInternal``): a
+    naive ``datetime`` in a TIMESTAMP column is the Python process's local
+    time, not the session time zone's."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import DataType, StructType
+
+    if not isinstance(schema, StructType):
+        schema = DataType.fromDDL(schema)
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    arrays = []
+    for field, col in zip(schema.fields, cols):
+        if field.dataType.needConversion():
+            col = [field.dataType.toInternal(v) for v in col]
+        arrays.append(pa.array(col, to_arrow_type(field.dataType)))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, names=schema.names), schema)

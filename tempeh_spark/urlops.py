@@ -127,12 +127,12 @@ def host_blocklist(
     does not. One explode + one join + one doc-keyed agg; no regex or
     LIKE scan over entries.
     """
+    from tempeh_spark.session import local_frame
     from tempeh_spark.webgraph import url_host
 
     if not isinstance(blocklist, DataFrame):
-        spark = df.sparkSession
-        blocklist = spark.createDataFrame(
-            [(e,) for e in sorted(set(blocklist))], "entry string"
+        blocklist = local_frame(
+            df.sparkSession, [(e,) for e in sorted(set(blocklist))], "entry string"
         )
     bl = blocklist.select(F.lower(F.col("entry")).alias("entry")).distinct()
     base = df.select(

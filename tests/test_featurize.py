@@ -199,3 +199,79 @@ def test_norm_is_exact_integer_sum(spark):
     df = spark.createDataFrame([(1, "aaaa")], "doc_id long, text string")
     v = list(text_embedding(df).first()["embedding"])
     assert v[b] == 1.0 and sum(v) == 1.0
+
+
+def _column_form_embedding(df, dim=64, ngram=3):
+    """The featurizer as it was before its counts were packed into one
+    array: dim count columns, a dim-term norm expression and a dim-element
+    division array. Kept as the value oracle of the packed form."""
+    from tempeh_spark.partitioning import ROW_MULTIPLYING, spread_if_narrow
+    from tempeh_spark.textops import char_ngrams
+
+    base = spread_if_narrow(df, "doc_id", ROW_MULTIPLYING)
+    grams = char_ngrams(base, [F.col("doc_id").alias("id")], "text", ngram, None)
+    bucket = F.pmod(
+        F.conv(F.substring(F.md5(F.encode(F.col("g"), "UTF-8")), 1, 8), 16, 10).cast("long"),
+        F.lit(dim),
+    )
+    wide = grams.select("id", bucket.alias("b")).groupBy("id").agg(
+        *[F.sum((F.col("b") == k).cast("long")).alias(f"c{k}") for k in range(dim)]
+    )
+    sumsq = F.col("c0") * F.col("c0")
+    for k in range(1, dim):
+        sumsq = sumsq + F.col(f"c{k}") * F.col(f"c{k}")
+    l2 = F.sqrt(sumsq.cast("double"))
+    emb = F.array(*[(F.col(f"c{k}").cast("double") / l2) for k in range(dim)])
+    vecs = wide.select("id", emb.alias("embedding"))
+    zeros = F.array(*[F.lit(0.0) for _ in range(dim)])
+    return (
+        df.select(F.col("doc_id").alias("id"))
+        .join(vecs, "id", "left")
+        .select("id", F.coalesce(F.col("embedding"), zeros).alias("embedding"))
+    )
+
+
+def _hex_rows(df):
+    import struct
+
+    return sorted(
+        (r["id"], tuple(struct.pack(">d", x).hex() for x in r["embedding"]))
+        for r in df.collect()
+    )
+
+
+def test_packed_counts_match_column_form(spark):
+    """The packed count array gives the column form's vectors bit for bit
+    (BIGINT sums are exact in any order, each component is the same one
+    IEEE division), on the edge rows of the featurizer's contract."""
+    from tempeh_spark.featurize import text_embedding
+
+    long_doc = " ".join(f"word{i % 97} tail{i % 13}" for i in range(800))[:8000]
+    rows = [
+        (1, ""),
+        (2, None),
+        (3, "ab"),                      # shorter than the n-gram
+        (4, long_doc),                  # an 8k-char document
+        (5, "abcabcabc"),
+        (5, "xyzxyzxyz"),               # a duplicate id
+        (6, "bad \ud800 surrogate"),    # a lone surrogate
+        (7, "the quick brown fox jumps over the lazy dog"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    assert len(long_doc) == 8000
+    assert _hex_rows(text_embedding(df)) == _hex_rows(_column_form_embedding(df))
+
+
+def test_packed_counts_plan_no_more_exchanges(spark):
+    """On an input already spread over 16 partitions (so not re-spread),
+    the packed form plans no more exchanges than the column form."""
+    from tempeh_spark.featurize import text_embedding
+
+    df = spark.createDataFrame(
+        [(i, f"document {i} " * (i % 7 + 1)) for i in range(64)], "doc_id long, text string"
+    ).repartition(16, "doc_id")
+
+    def exchanges(out):
+        return out._jdf.queryExecution().executedPlan().toString().count("Exchange hashpartitioning")
+
+    assert exchanges(text_embedding(df)) <= exchanges(_column_form_embedding(df))

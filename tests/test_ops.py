@@ -220,12 +220,16 @@ def test_duplicate_components(spark, monkeypatch):
     df = spark.createDataFrame(pairs, "id_a long, id_b long")
     for limit in (5_000_000, 0):  # fast path, then forced distributed loop
         monkeypatch.setattr(dedup, "DRIVER_EDGE_LIMIT", limit)
-        comp = {
-            r["doc_id"]: r["component"]
-            for r in duplicate_components(df).collect()
-        }
+        out = duplicate_components(df)
+        comp = {r["doc_id"]: r["component"] for r in out.collect()}
         assert all(comp[v] == 1 for v in (1, 2, 3, 4, 5, 6)), limit
         assert comp[10] == 10 and comp[11] == 10, limit
+        assert out.schema.simpleString() == "struct<doc_id:bigint,component:bigint>"
+    # the fast path's labels are an Arrow-backed local relation, not a scan
+    # of pickled rows that a second Python worker pool must read
+    monkeypatch.setattr(dedup, "DRIVER_EDGE_LIMIT", 5_000_000)
+    plan = duplicate_components(df)._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan and "LocalTableScan" in plan
 
 
 def test_vecmath_bit_equal_to_interpreted_fold(spark):
@@ -692,3 +696,59 @@ def test_embedding_lsh_centered_concentrated(spark):
         planes_per_band=16, center=True,
     )
     assert {(r["id_a"], r["id_b"]) for r in out2.collect()} == pairs
+
+
+def _bucket_pairs(banded_rows) -> set[tuple[int, int]]:
+    """Brute force: every id_a < id_b that share a (band, sig) bucket."""
+    return {
+        (a, b)
+        for a, band_a, sig_a in banded_rows
+        for b, band_b, sig_b in banded_rows
+        if a < b and (band_a, sig_a) == (band_b, sig_b)
+    }
+
+
+def test_lsh_candidates_match_brute_force(spark):
+    """One group per bucket gives exactly the pairs that share a bucket:
+    a three-id bucket expands to its three pairs, a pair colliding in two
+    bands comes out once, and a duplicate id pairs with nothing but others."""
+    from tempeh_spark.dedup import lsh_candidates
+
+    rows = [
+        (1, 0, "s1"), (2, 0, "s1"), (3, 0, "s1"),  # a bucket of three ids
+        (4, 0, "s2"), (5, 0, "s2"),
+        (4, 1, "t2"), (5, 1, "t2"),                # 4-5 collide in two bands
+        (6, 0, "s3"), (6, 0, "s3"), (7, 0, "s3"),  # a duplicate id row
+        (6, 1, "t6"), (6, 1, "t6"),                # ... alone in a bucket
+        (8, 2, "s1"),                              # same sig, other band
+    ]
+    banded = spark.createDataFrame(rows, "id long, band int, sig string")
+    got = [tuple(r) for r in lsh_candidates(banded).collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == _bucket_pairs(rows) == {(1, 2), (1, 3), (2, 3), (4, 5), (6, 7)}
+
+
+def test_minhash_candidates_one_signature_aggregate(spark, docs):
+    """minhash_lsh_pairs' candidates are the brute-force bucket pairs of
+    the same band signatures, and the candidate plan aggregates the
+    signatures once, not once per side of a self-join."""
+    from tempeh_spark.dedup import band_signatures, lsh_candidates, minhash_lsh_pairs, shingle_rows
+
+    more = docs.union(
+        spark.createDataFrame(
+            [(7, "the quick brown fox jumps over the lazy dog")] * 2,  # a duplicate id
+            "doc_id long, text string",
+        )
+    )
+    banded = band_signatures(shingle_rows(more))
+    want = _bucket_pairs([tuple(r) for r in banded.collect()])
+    # docs 1, 2 and 7 share every band: a three-id bucket, in four bands
+    assert {(1, 2), (1, 7), (2, 7)} <= want
+    got = {(r["id_a"], r["id_b"]) for r in minhash_lsh_pairs(more, verify_threshold=0.0).collect()}
+    assert got == want
+
+    cand = lsh_candidates(banded)
+    cand.collect()
+    plan = cand._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("functions=[min(md5(") == 1, final

@@ -61,3 +61,23 @@ def test_profile_record(spark, name, pandas_udf):
         assert rec["python_bytes_received"] > 0
     else:
         assert rec["python_bytes_received"] == 0
+
+
+@pytest.mark.parametrize("reader", ["_docs", "_emb"])
+def test_table_reads_run_no_job(spark, reader):
+    """The gated queries' table reads pass the known schema, so building
+    one runs no schema-inference job; the schema is the file's own."""
+    import __spark_entry__ as entrymod
+
+    sf = "/root/testdata/sf0.01"
+    sc = spark.sparkContext
+    group = f"table-read-{reader}"
+    sc.setJobGroup(group, "build only")
+    try:
+        df = getattr(entrymod, reader)(spark, sf)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    name = {"_docs": "documents", "_emb": "embeddings"}[reader]
+    inferred = spark.read.parquet(f"{sf}/{name}.parquet").schema
+    assert df.schema.simpleString() == inferred.simpleString()

@@ -1,7 +1,8 @@
 """The command-line tools and bench.py stay importable, do no work at
 import, and every engine name they import still exists; every public
 engine function or class is reached from code outside the tests; each
-twinned vector operation is spelled in one place per engine."""
+twinned vector operation is spelled in one place per engine; driver-side
+rows become a DataFrame in one place."""
 
 from __future__ import annotations
 
@@ -193,3 +194,17 @@ def test_vector_twins_have_one_home():
         if isinstance(n, ast.Call) and getattr(n.func, "id", None) == "_hyperplane"
     }
     assert callers == {"_planes"}
+
+
+def test_local_rows_have_one_home():
+    # createDataFrame of a Python list plans as a scan of pickled rows, and
+    # the first action over it starts a second Python worker pool; the
+    # engine sends driver-side rows through the one Arrow-backed helper
+    calls = {
+        (path.stem, getattr(node, "name", node.lineno))
+        for path in [REPO / "__spark_entry__.py", *ENGINE]
+        for node in ast.parse(path.read_text()).body
+        for n in ast.walk(node)
+        if isinstance(n, ast.Call) and getattr(n.func, "attr", None) == "createDataFrame"
+    }
+    assert calls == {("session", "local_frame")}
